@@ -41,18 +41,20 @@ object Bench {
     "q1_agg" -> 0.26, "q3_join" -> 0.62, "dd_minhash" -> 1.12,
     "ann_brute_topk" -> 0.45, "st_window_counts" -> 1.28)
 
+  /** One pass of `name`: the timed region is the builder plus `count()`;
+    * the per-query cache drop runs after the clock stops. None when the
+    * query fails — a failed query must NOT masquerade as a fast one. */
+  private def timeOnce(spark: SparkSession, name: String, sfDir: String): Option[Double] =
+    LocalSpark.consume(spark) {
+      val t0 = System.nanoTime()
+      try { SparkEntry.queries(name)(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case NonFatal(_) => None }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.envCpus
+    val spark = LocalSpark.session(cpus)
     val loadStart = loadAvg1m()
     // headline set (SURVEY §6): one representative per suite — the graded
     // value stays comparable as the inventory widens
@@ -65,20 +67,14 @@ object Bench {
     // plants ~40 streaming state stores inside the measuring JVM.
     spark.read.parquet(s"$sfDir/nation.parquet").count()
     val warmSf = "/root/testdata/sf0.001"
-    headline.toSeq.sorted.foreach { n =>
-      try SparkEntry.queries(n)(spark, warmSf).count() catch { case NonFatal(_) => }
-      spark.catalog.clearCache()
-    }
+    headline.toSeq.sorted.foreach(timeOnce(spark, _, warmSf))
     // One untimed headline pass at the TARGET sf: earlier rounds timed the
     // headline mid-sweep, where its parquet was already page-cached by prior
     // queries — without this pass the reordered bench would charge the
     // headline for first-touch disk reads no other round's number includes
     // (measured ~0.7 s of the 5.4 s r6a run). Warm-cache steady-state plan
     // cost is the declared metric (BENCH.md) — first-touch IO is not.
-    headline.toSeq.sorted.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir).count() catch { case NonFatal(_) => }
-      spark.catalog.clearCache()
-    }
+    headline.toSeq.sorted.foreach(timeOnce(spark, _, sfDir))
     // the graded headline runs FIRST, straight off the warmup, so 260+ other
     // queries' accumulated JVM/GC/state-store debt can't land inside its
     // timing window (the round-4/5 confound: same queries drifted 1.7×
@@ -92,7 +88,6 @@ object Bench {
     val headlinePasses = scala.collection.mutable.LinkedHashMap
       .empty[String, Seq[Double]]
     val results = ordered.map { name =>
-      val fn = SparkEntry.queries(name)
       // the graded queries start from a collected heap so accumulated GC
       // debt from earlier queries doesn't land inside their timing window
       if (headline(name)) System.gc()
@@ -101,18 +96,10 @@ object Bench {
       // scheduler noise; round-6's artifact recorded 67× on a one-shuffle
       // groupBy under concurrent load). Sweep queries: one pass.
       val passes = if (headline(name)) 3 else 1
-      val times = (1 to passes).flatMap { _ =>
-        val t0 = System.nanoTime()
-        // a failed query must NOT masquerade as a fast one: record -1 so a
-        // regression reads as an error in the artifact, not as a perf win
-        val ok = try { fn(spark, sfDir).count(); true } catch { case NonFatal(_) => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // drop per-query persisted intermediates so caches don't leak memory
-        // pressure into later queries (and so pass 2 re-executes the plan
-        // rather than reading pass 1's cache)
-        spark.catalog.clearCache()
-        if (ok) Some(dt) else None
-      }
+      // a failed pass is dropped, so a failed query records -1 and reads as
+      // an error in the artifact; the cache drop between passes makes pass 2
+      // re-execute the plan rather than read pass 1's cache
+      val times = (1 to passes).flatMap(_ => timeOnce(spark, name, sfDir))
       if (headline(name)) headlinePasses(name) = times
       name -> (if (times.size == passes) times.min else -1.0)
     }
@@ -132,14 +119,7 @@ object Bench {
       .take(10).map(_._1).toSet
     val finalResults = results.map { case (n, v) =>
       if (!outliers(n)) n -> v
-      else {
-        val t0 = System.nanoTime()
-        val ok = try { SparkEntry.queries(n)(spark, sfDir).count(); true }
-          catch { case NonFatal(_) => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        n -> (if (ok) math.min(v, dt) else v)
-      }
+      else n -> timeOnce(spark, n, sfDir).fold(v)(math.min(v, _))
     }
     val qs = finalResults.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -183,7 +163,6 @@ object Bench {
     // catches sustained inflation at ANY spread). A real single-query
     // regression trips at most its own row and stays below the majority
     // cut. contended:true means: discard the number, re-run idle.
-    val cpusN = try cpus.toInt catch { case NonFatal(_) => 4 }
     val inflatedMins = headlinePasses.count { case (n, ts) =>
       ts.nonEmpty && headlineCleanRef.get(n).exists(ref => ts.min >= 2.0 * ref)
     }
@@ -193,7 +172,7 @@ object Bench {
     // only participates on the sf0.1 fixture; elsewhere the loadavg test
     // stands alone
     val refsApply = sfDir.replaceAll("/+$", "").endsWith("sf0.1")
-    val contended = loadStart > cpusN / 4.0 ||
+    val contended = loadStart > cpus / 4.0 ||
       (refsApply && inflatedMins * 2 > headlineCleanRef.size)
     // sweep self-verdict (the headline has `contended`; this gives the
     // SWEEP total the same property): the outlier re-time only ever

@@ -96,72 +96,76 @@ object GraftApp {
     * pipeline reloads per micro-batch, so a command's effect reaches the
     * very next event (the reference's in-memory handoff, made durable). */
   def commandDispatcher(spark: SparkSession, rulesPath: String,
-      eventLogDir: String): CommandParser.Parsed => Option[String] = { p =>
-    def store = readRules(spark, rulesPath)
-    def saveAnd(f: DataFrame => DataFrame, reply: String): Option[String] = {
-      mutateRules(spark, rulesPath)(f); Some(reply)
-    }
-    p.kind match {
-      case "status" => Some("I'm alive!")
-      case "list" =>
-        val s = store
-        try {
-          val names = s.select(col("name")).collect().map(_.getString(0)).sorted
-          Some(if (names.isEmpty) "No rules." else names.mkString(", "))
-        } finally s.unpersist()
-      case "show" =>
-        val s = store
-        try {
-          val rows = s.filter(col("name") === p.name.get).toJSON.collect()
-          Some(rows.headOption.getOrElse(s"No rule named ${p.name.get}"))
-        } finally s.unpersist()
-      case "remove" => saveAnd(RuleStore.remove(_, p.name.get),
-        s"Rule ${p.name.get} removed.")
-      case "enable_re" => saveAnd(RuleStore.setEnabled(_, p.name.get, enabled = true),
-        "Rules enabled.")
-      case "disable_re" => saveAnd(RuleStore.setEnabled(_, p.name.get, enabled = false),
-        "Rules disabled.")
-      case "renew" =>
-        val newExp = Rules.nowUs + p.expiryDays.get.toLong * 86400L * 1000000L
-        saveAnd(RuleStore.renew(_, p.name.get, newExp), s"Rule ${p.name.get} renewed.")
-      case "add" =>
-        CommandParser.toRuleRow(p, Rules.nowUs) match {
-          case Some(row) =>
-            try saveAnd(RuleStore.add(_, row, spark), s"Rule ${row.name} added.")
-            catch { case e: IllegalArgumentException => Some(e.getMessage) }
-          case None => Some("Could not compile rule")
-        }
-      case "test" =>
-        // the Lua-criterion analog (rules test $code$): evaluate the SQL
-        // predicate against the namechk synthetic user (lua.rs semantics)
-        val verdict =
+      eventLogDir: String): CommandParser.Parsed => Option[String] = {
+    // `rules test` criteria may call is_in_ip_range (lua.rs:85-100)
+    graft.plans.GraftExtensions.install(spark)
+    p => {
+      def store = readRules(spark, rulesPath)
+      def saveAnd(f: DataFrame => DataFrame, reply: String): Option[String] = {
+        mutateRules(spark, rulesPath)(f); Some(reply)
+      }
+      p.kind match {
+        case "status" => Some("I'm alive!")
+        case "list" =>
+          val s = store
           try {
-            import spark.implicits._
-            Seq((0L, "testuser", "qwe@asd.zxc", "127.0.0.1",
-                Option.empty[String], Option.empty[String], false, 0L))
-              .toDF("event_id", "username", "email", "ip", "ua", "fingerprint",
-                "susp_ip", "ts_us")
-              .select(RuleEngine.sqlCriterion(p.value.get).as("v"))
-              .head.get(0)
-          } catch { case e: Exception => s"error: ${e.getMessage}" }
-        Some(s"Result: $verdict")
-      case "namechk" =>
-        val s = store
-        try {
-          val hits = RuleEngine.namechk(spark, p.name.get, s).collect()
-          Some(if (hits.isEmpty) "No rule matches that username."
-          else hits.map(r => s"${r.getString(0)} -> ${r.getString(1)}").mkString("; "))
-        } finally s.unpersist()
-      case "seen" =>
-        val path = new org.apache.hadoop.fs.Path(eventLogDir)
-        val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(path)) Some("Username not seen recently")
-        else {
-          val n = spark.read.parquet(eventLogDir)
-            .filter(col("username") === p.name.get).count()
-          Some(if (n > 0) s"Seen: ${p.name.get} ($n events)" else "Username not seen recently")
-        }
-      case _ => Some("Could not parse user command")
+            val names = s.select(col("name")).collect().map(_.getString(0)).sorted
+            Some(if (names.isEmpty) "No rules." else names.mkString(", "))
+          } finally s.unpersist()
+        case "show" =>
+          val s = store
+          try {
+            val rows = s.filter(col("name") === p.name.get).toJSON.collect()
+            Some(rows.headOption.getOrElse(s"No rule named ${p.name.get}"))
+          } finally s.unpersist()
+        case "remove" => saveAnd(RuleStore.remove(_, p.name.get),
+          s"Rule ${p.name.get} removed.")
+        case "enable_re" => saveAnd(RuleStore.setEnabled(_, p.name.get, enabled = true),
+          "Rules enabled.")
+        case "disable_re" => saveAnd(RuleStore.setEnabled(_, p.name.get, enabled = false),
+          "Rules disabled.")
+        case "renew" =>
+          val newExp = Rules.nowUs + p.expiryDays.get.toLong * 86400L * 1000000L
+          saveAnd(RuleStore.renew(_, p.name.get, newExp), s"Rule ${p.name.get} renewed.")
+        case "add" =>
+          CommandParser.toRuleRow(p, Rules.nowUs) match {
+            case Some(row) =>
+              try saveAnd(RuleStore.add(_, row, spark), s"Rule ${row.name} added.")
+              catch { case e: IllegalArgumentException => Some(e.getMessage) }
+            case None => Some("Could not compile rule")
+          }
+        case "test" =>
+          // the Lua-criterion analog (rules test $code$): evaluate the SQL
+          // predicate against the namechk synthetic user (lua.rs semantics)
+          val verdict =
+            try {
+              import spark.implicits._
+              Seq((0L, "testuser", "qwe@asd.zxc", "127.0.0.1",
+                  Option.empty[String], Option.empty[String], false, 0L))
+                .toDF("event_id", "username", "email", "ip", "ua", "fingerprint",
+                  "susp_ip", "ts_us")
+                .select(RuleEngine.sqlCriterion(p.value.get).as("v"))
+                .head().get(0)
+            } catch { case e: Exception => s"error: ${e.getMessage}" }
+          Some(s"Result: $verdict")
+        case "namechk" =>
+          val s = store
+          try {
+            val hits = RuleEngine.namechk(spark, p.name.get, s).collect()
+            Some(if (hits.isEmpty) "No rule matches that username."
+            else hits.map(r => s"${r.getString(0)} -> ${r.getString(1)}").mkString("; "))
+          } finally s.unpersist()
+        case "seen" =>
+          val path = new org.apache.hadoop.fs.Path(eventLogDir)
+          val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+          if (!fs.exists(path)) Some("Username not seen recently")
+          else {
+            val n = spark.read.parquet(eventLogDir)
+              .filter(col("username") === p.name.get).count()
+            Some(if (n > 0) s"Seen: ${p.name.get} ($n events)" else "Username not seen recently")
+          }
+        case _ => Some("Could not parse user command")
+      }
     }
   }
 

@@ -104,10 +104,6 @@ object Dedup {
     * cannot intersect). */
   val maxDf = 50
 
-  private def shingled(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
-      .select(col("doc_id"), Portable.shingles(Portable.words(col("text"))).as("sh"))
-
   private def shingledCteFrom(where: String): String =
     s"""sh0 AS (SELECT doc_id, ${Portable.wordsSql} AS w FROM documents$where),
        |shd AS (SELECT doc_id, ${Portable.shinglesSql()} AS sh FROM sh0)""".stripMargin

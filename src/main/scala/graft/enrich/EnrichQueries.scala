@@ -190,9 +190,9 @@ object EnrichQueries {
       // Lifetime (r10, VERDICT #7): owned by the consuming action's
       // session; the builder returns a LAZY frame, so it cannot unpersist
       // without recomputing. Every repeated-invocation caller in this repo
-      // (Bench, Verify, QTime, StreamProf) calls
-      // spark.catalog.clearCache() after consuming each query — that is
-      // the documented protocol for long-lived sessions, spec-pinned in
+      // (Bench, Verify, Dev) consumes each query through
+      // LocalSpark.consume, which clears the cache after it — the
+      // documented protocol for long-lived sessions, spec-pinned in
       // PersistLifecycleSpec.
       .persist()
     val left = s.select(col("event_id").as("ea"), col("lat_mdeg").as("la"),

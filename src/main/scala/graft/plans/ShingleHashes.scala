@@ -55,7 +55,6 @@ object ShingleHashes {
   private val digest = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
-  private val hexChars = "0123456789abcdef".toCharArray
 
   /** Identical to `Portable.hash64`: first 15 hex digits of MD5, base 16. */
   def hash64(s: String): Long = {

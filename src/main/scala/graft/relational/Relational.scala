@@ -1560,7 +1560,6 @@ object Relational {
     val byTs = W.partitionBy(col("user_id")).orderBy(col("ts_us"))
     val dayFrame = byTs.rangeBetween(-86399999999L, -1L)
     val lifeFrame = byTs.rangeBetween(W.unboundedPreceding, -1L)
-    val byRow = W.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
     ev
       .withColumn("f_views_24h", coalesce(
         sum(when(col("event_type") === "view", 1L).otherwise(0L)).over(dayFrame),

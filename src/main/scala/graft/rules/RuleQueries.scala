@@ -1,6 +1,5 @@
 package graft.rules
 
-import graft.epochUs
 import graft.events.Signups
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -531,8 +530,6 @@ object RuleQueries {
     * the verdict identically on both engines, the ev_spike variance
     * trick). */
   def botTiming(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
     graft.Tables(spark, sfDir).events
       .select(col("user_id"), col("event_id"), graft.epochUs(col("ts")).as("ts_us"))
       .withColumn("gap_s",

@@ -562,7 +562,7 @@ object Similarity {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toSeq
     }
     val trace = e.select(graft.plans.VectorDot(col("v"), col("v")).as("sq"))
-      .agg(sum(col("sq"))).head.getDouble(0)
+      .agg(sum(col("sq"))).head().getDouble(0)
     val share = BigDecimal(lam / trace)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val lamOut = BigDecimal(lam).setScale(3, BigDecimal.RoundingMode.HALF_UP)

@@ -89,7 +89,7 @@ object ActionSink {
     // stage fresh rows (replay-idempotent: anti-join the pending log)
     undispatched(spark, batch, pendingDir).write.mode("append").parquet(pendingDir)
     val pending = spark.read.parquet(pendingDir)
-    val clockRow = pending.agg(max(col("ts_us"))).head
+    val clockRow = pending.agg(max(col("ts_us"))).head()
     if (!clockRow.isNullAt(0)) { // an all-empty pending log has no clock yet
       val due = pending.filter(col("due_us") <= clockRow.getLong(0))
       val fresh = undispatched(spark, due, logDir)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -44,9 +44,9 @@ object StreamOps {
     * (the stream-stream join measured 12.7 s at 32 partitions vs 3.1 s at
     * 8 on the bench corpus). Production sizes state partitions to state
     * volume, not to the batch shuffle default — so every harness query pins
-    * its own partition count (`graft.streaming.statePartitions`, default 8;
-    * streaming pins partitioning at checkpoint creation, so the setting is
-    * per-query and restored after). Results are partition-count-invariant. */
+    * its own partition count (8; streaming pins partitioning at checkpoint
+    * creation, so the setting is per-query and restored after). Results
+    * are partition-count-invariant. */
   def runToTable(spark: SparkSession, sfDir: String, mode: OutputMode)(
       build: DataFrame => DataFrame): DataFrame =
     withStatePartitions(spark)(runToTableUnscoped(spark, sfDir, mode)(build))
@@ -54,8 +54,7 @@ object StreamOps {
   /** Pin the stateful-query partition count for the duration of `f`. */
   def withStatePartitions[A](spark: SparkSession)(f: => A): A = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.getOption("graft.streaming.statePartitions").getOrElse("8"))
+    spark.conf.set("spark.sql.shuffle.partitions", 8L)
     try f
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
@@ -100,7 +99,7 @@ object StreamOps {
     * checkpoint (memory sink, deleted at stop, never restarted-from) — but
     * Spark's default temp dir is java.io.tmpdir, where each micro-batch
     * pays real disk latency for the offset WAL, the commit log, the file-
-    * source log, and one state-store delta file per partition (StreamProf:
+    * source log, and one state-store delta file per partition (`Dev prof`:
     * ~0.4 s/row of WAL+offsets across 39 st_* rows). The DURABILITY of
     * these files is irrelevant by construction — the query runs once to
     * completion and the dir is deleted in the same call — so they belong

@@ -32,8 +32,6 @@ final class ZulipRtm(
     handler: String => Option[String],
     onPing: () => Unit = () => ()) {
 
-  private implicit val formats: Formats = DefaultFormats
-
   /** Register the message-event queue; returns the queue id.
     * The reference panics on a missing queue_id (rtm.rs:66-68) — surfaced
     * here as an exception for the supervisor to retry. */

@@ -4,17 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTest {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // fixed 4 cores, not SPARK_GRAFT_CPUS: results must not depend on the box
+  lazy val spark: SparkSession = LocalSpark.session(cpus = 4)
   val sf: String = "/root/testdata/sf0.001"
 }
 
@@ -105,7 +96,7 @@ class CoreSpec extends AnyFunSuite {
 
   test("ev_spike: a deviation over a flat baseline is a spike, not 'ok'") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit, to_timestamp, from_unixtime}
+    import org.apache.spark.sql.functions.{col, to_timestamp, from_unixtime}
     // 10 flat minutes of 5 events, then one minute with 50: zero variance,
     // infinite z — must flag, with z null
     val rows = (0 until 10).flatMap(m => (0 until 5).map(i => (m.toLong * 60 + i, "t"))) ++

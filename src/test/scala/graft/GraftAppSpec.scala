@@ -9,7 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.rules.{RuleRow, Rules, RuleStore}
-import graft.zulip.ZulipConf
+import graft.zulip.{ZulipConf, ZulipRtm}
 
 /** The whole reference program (main.rs:13-54) running as one composition
   * against a live fake feed + fake Zulip: a moderator command adds a rule
@@ -144,5 +144,15 @@ class GraftAppSpec extends AnyFunSuite {
     val names = RuleStore.load(spark, rulesPath)
       .select("name").collect().map(_.getString(0)).toSet
     assert(names == Set("r_old", "e2e"))
+  }
+
+  test("rules test: is_in_ip_range resolves on a session without the extensions") {
+    // a fresh session has none of the functions earlier specs installed
+    val fresh = spark.newSession()
+    val work = java.nio.file.Files.createTempDirectory("graft_cmd").toString
+    val reply = ZulipRtm.parseOrError(
+      GraftApp.commandDispatcher(fresh, s"$work/rules.json", s"$work/events"))
+    assert(reply("signup rules test `is_in_ip_range(ip, '127.0.0.0', '127.255.255.255')`")
+      .contains("Result: true"))
   }
 }

@@ -237,7 +237,7 @@ class HttpSourceSpec extends AnyFunSuite {
         os.write("{\"a\":1}\n".getBytes(StandardCharsets.UTF_8)); os.flush()
         Thread.sleep(5000)
         os.close()
-      } else chunked(ex, Seq("{\"a\":2}"))
+      } else chunked(ex, if (hit == 2) Seq("{\"a\":2}") else Nil)
     }
     val q = spark.readStream.format("http-ndjson")
       .option("url", url).option("reconnectDelayMs", 100)
@@ -264,7 +264,7 @@ class HttpSourceSpec extends AnyFunSuite {
           Thread.sleep(100)
         } catch { case _: Exception => () } // watchdog disconnected us — expected
         try os.close() catch { case _: Exception => () }
-      } else chunked(ex, Seq("data: two", ""))
+      } else chunked(ex, if (hit == 2) Seq("data: two", "") else Nil)
     }
     val q = spark.readStream.format("http-ndjson")
       .option("url", url).option("mode", "sse").option("reconnectDelayMs", 100)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ann_ivf_pq — the FAISS-IVFPQ composite: coarse probe bounds WHICH

@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * by their builders — a builder returns a LAZY frame, so it cannot
   * unpersist without recomputing for the consumer. The documented ownership
   * protocol is SESSION-level: every repeated-invocation caller in this repo
-  * (Bench, Verify, QTime, StreamProf) calls `spark.catalog.clearCache()`
-  * after consuming each query. This spec pins that the protocol actually
-  * reclaims the blocks — repeated invocations under the protocol do NOT
+  * (Bench, Verify, Dev) consumes each query through `LocalSpark.consume`,
+  * which calls `spark.catalog.clearCache()` after it. This spec pins that
+  * the protocol actually reclaims the blocks — repeated invocations under the protocol do NOT
   * grow the persisted-RDD set — so a long-lived session (GraftApp-style
   * driver loop) following it cannot leak cache blocks across invocations.
   */
@@ -26,14 +26,26 @@ class PersistLifecycleSpec extends AnyFunSuite {
     val rows = Seq("geo_cluster", "ev_xcorr", "ev_series_lsh")
     (1 to 2).foreach { _ =>
       rows.foreach { name =>
-        SparkEntry.queries(name)(spark, sf).count()
-        assert(persistedCount > 0,
-          s"$name should persist at least one frame while consuming")
-        spark.catalog.clearCache()
+        LocalSpark.consume(spark) {
+          SparkEntry.queries(name)(spark, sf).count()
+          assert(persistedCount > 0,
+            s"$name should persist at least one frame while consuming")
+        }
         assert(persistedCount == 0,
           s"$name left persisted RDDs after clearCache() — the documented " +
             "session-ownership protocol would leak in a long-lived session")
       }
     }
+  }
+
+  test("graft.Dev plan and time leave the shared session running and uncached") {
+    val out = java.nio.file.Files.createTempDirectory("graft_dev_plan")
+    Dev.plan(spark, sf, out.toString, Some(Set("q1_agg")))
+    Dev.time(spark, sf, Seq("q1_agg"))
+    val plan = java.nio.file.Files.readString(out.resolve("q1_agg.txt"))
+    assert(plan.contains("== Physical Plan =="), plan)
+    assert(!spark.sparkContext.isStopped && spark.range(3).count() == 3,
+      "a Dev mode must not stop the session it is given")
+    assert(persistedCount == 0)
   }
 }

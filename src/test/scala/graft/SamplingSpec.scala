@@ -140,7 +140,6 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("samp_upsample: copies bracketed by floor/ceil of the boost; fully deterministic") {
-    import org.apache.spark.sql.functions._
     val boosts = sample.Sampling.temperature(spark, sf).collect()
       .map(r => r.getAs[String]("source") -> r.getAs[Double]("boost")).toMap
     def run() = sample.Sampling.upsample(spark, sf).collect()

@@ -1,14 +1,19 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
+import javax.annotation.concurrent.GuardedBy
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.commands.CommandParser
 import graft.rules.{RuleEngine, Rules, RuleStore}
-import graft.streaming.{ActionSink, NdjsonIngest}
+import graft.streaming.{ActionSink, DelayedDispatcher, NdjsonIngest}
 import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
 
 /** The reference program (main.rs:13-54) as ONE supervised composition —
@@ -18,15 +23,16 @@ import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
   *     signup stream ([[NdjsonIngest.fromHttp]]), silence-supervised by the
   *     source itself (status.rs:36-45's 90 s watchdog as
   *     `silenceRestartMs`).
-  *   - `eventhandler::handle_events` → a foreachBatch loop that reloads the
-  *     rule FILE each micro-batch (commands mutate it concurrently — a
-  *     stream-static join would pin the file listing at plan time, the
-  *     RecoverySpec finding), matches via the broadcast rule join, and
-  *     dispatches through [[ActionSink.dispatchDelayedBatch]] (the
-  *     randomized 30–100 s hold, effectively-once).
+  *   - `eventhandler::handle_events` → a foreachBatch loop that logs the
+  *     batch for `seen`, matches it via the broadcast rule join against the
+  *     in-memory rule snapshot (the reference's rule vector; rebuilt from the
+  *     rules file only after a mutation), and hands the matches to one
+  *     [[DelayedDispatcher]] per start: due-now actions fire in the same
+  *     batch, the randomized 30–100 s holds wait in the pending log
+  *     (effectively-once either way).
   *   - `zulip::rtm::connect_to_zulip` + `status::status_loop` → [[ZulipRtm]]
   *     under [[ZulipSupervisor]] (300 s ping watchdog), commands dispatched
-  *     by [[commandDispatcher]] against the same rules file.
+  *     by [[commandDispatcher]] against the same rule snapshot and file.
   *   - `signup::rules::expiry_loop` → a sweep thread that runs
   *     [[RuleStore.sweepNotices]]/[[RuleStore.sweep]] on a cadence and posts
   *     each once-only notice to the notify stream.
@@ -66,58 +72,86 @@ object GraftApp {
     }
   }
 
-  /** Serializes every touch of the rules file. Three threads share it
-    * (Zulip commands, the expiry sweep, the per-batch reload), and a plain
+  /** Serializes every touch of the rules store. Three threads share it
+    * (Zulip commands, the expiry sweep, the micro-batches), and a plain
     * `load → transform → save(overwrite)` is doubly unsafe concurrently:
-    * overwrite deletes the very files the lazy load still reads
-    * (self-overwrite), and two writers stomp one `_temporary` dir. Every
-    * read therefore materializes a SNAPSHOT (localCheckpoint cuts the
-    * lineage back to the files) under the lock; writes hold the lock
-    * across the read-modify-write. The reference has the same critical
+    * overwrite deletes the very files a lazy load still reads
+    * (self-overwrite), and two writers stomp one `_temporary` dir. So every
+    * read goes through the snapshot below and every write holds the lock
+    * across its read-modify-write. The reference has the same critical
     * section implicitly — one mpsc consumer owns the rules (main.rs:15). */
   private val rulesLock = new Object
 
-  /** Materialized snapshot of the store — safe to use after release. */
-  private def readRules(spark: SparkSession, rulesPath: String): DataFrame =
-    rulesLock.synchronized {
-      RuleStore.load(spark, rulesPath).localCheckpoint(true)
-    }
+  /** The rules of each store path (one JVM can run two apps), held as local
+    * rows like the reference's in-memory rule vector. A frame built on them
+    * is a local relation: matching a batch against it reads no file, and
+    * a write built from it cannot read the files it overwrites. Every
+    * mutation drops its path's entry, so the next read reloads the file. */
+  @GuardedBy("rulesLock")
+  private val snapshots = mutable.Map.empty[String, (StructType, Array[Row])]
 
-  private def mutateRules(spark: SparkSession, rulesPath: String)(
+  /** The current rules of `rulesPath`, loaded from the file only when a
+    * mutation has happened since the last load. */
+  private[graft] def rules(spark: SparkSession, rulesPath: String): DataFrame = {
+    val (schema, rows) = rulesLock.synchronized {
+      snapshots.getOrElseUpdate(rulesPath, {
+        val df = RuleStore.load(spark, rulesPath)
+        (df.schema, df.collect())
+      })
+    }
+    spark.createDataFrame(rows.toSeq.asJava, schema)
+  }
+
+  private[graft] def mutateRules(spark: SparkSession, rulesPath: String)(
       f: DataFrame => DataFrame): Unit =
     rulesLock.synchronized {
-      val cur = RuleStore.load(spark, rulesPath)
-      val next = f(cur).localCheckpoint(true)
-      try RuleStore.save(next, rulesPath)
-      finally next.unpersist()
+      // dropped even when the save fails: it may have changed the store
+      try RuleStore.save(f(rules(spark, rulesPath)), rulesPath)
+      finally snapshots.remove(rulesPath)
     }
 
-  /** Zulip command dispatch against the rules FILE — the store the event
-    * pipeline reloads per micro-batch, so a command's effect reaches the
-    * very next event (the reference's in-memory handoff, made durable). */
+  /** One expiry sweep: advance the once-only notice counters and drop the
+    * expired rules in one store mutation, and return the notices to post.
+    * Posting happens after the save (at-most-once notices, like the
+    * reference, which posts from the same pass that mutates state). */
+  private[graft] def sweepRules(spark: SparkSession, rulesPath: String,
+      nowUs: Long): Seq[(String, String)] = {
+    var notices = Seq.empty[(String, String)]
+    mutateRules(spark, rulesPath) { cur =>
+      val noticed = RuleStore.sweepNotices(cur, nowUs)
+      notices = noticed.filter(col("notice").isNotNull)
+        .select(col("name"), col("notice")).collect().toSeq
+        .map(r => (r.getString(0), r.getString(1)))
+      RuleStore.sweep(noticed.drop("notice"), nowUs)
+    }
+    notices
+  }
+
+  /** The one column of the event log `seen` reads. Schema-less reads of
+    * parquet sample a footer, which costs a job. */
+  private val seenSchema = StructType(Seq(StructField("username", StringType)))
+
+  /** Zulip command dispatch against the rule snapshot the event pipeline
+    * matches with; a mutation saves the file and drops the snapshot, so its
+    * effect reaches the very next batch (the reference's in-memory handoff,
+    * made durable). */
   def commandDispatcher(spark: SparkSession, rulesPath: String,
       eventLogDir: String): CommandParser.Parsed => Option[String] = {
     // `rules test` criteria may call is_in_ip_range (lua.rs:85-100)
     graft.plans.GraftExtensions.install(spark)
     p => {
-      def store = readRules(spark, rulesPath)
+      def store = rules(spark, rulesPath)
       def saveAnd(f: DataFrame => DataFrame, reply: String): Option[String] = {
         mutateRules(spark, rulesPath)(f); Some(reply)
       }
       p.kind match {
         case "status" => Some("I'm alive!")
         case "list" =>
-          val s = store
-          try {
-            val names = s.select(col("name")).collect().map(_.getString(0)).sorted
-            Some(if (names.isEmpty) "No rules." else names.mkString(", "))
-          } finally s.unpersist()
+          val names = store.select(col("name")).collect().map(_.getString(0)).sorted
+          Some(if (names.isEmpty) "No rules." else names.mkString(", "))
         case "show" =>
-          val s = store
-          try {
-            val rows = s.filter(col("name") === p.name.get).toJSON.collect()
-            Some(rows.headOption.getOrElse(s"No rule named ${p.name.get}"))
-          } finally s.unpersist()
+          val rows = store.filter(col("name") === p.name.get).toJSON.collect()
+          Some(rows.headOption.getOrElse(s"No rule named ${p.name.get}"))
         case "remove" => saveAnd(RuleStore.remove(_, p.name.get),
           s"Rule ${p.name.get} removed.")
         case "enable_re" => saveAnd(RuleStore.setEnabled(_, p.name.get, enabled = true),
@@ -149,18 +183,15 @@ object GraftApp {
             } catch { case e: Exception => s"error: ${e.getMessage}" }
           Some(s"Result: $verdict")
         case "namechk" =>
-          val s = store
-          try {
-            val hits = RuleEngine.namechk(spark, p.name.get, s).collect()
-            Some(if (hits.isEmpty) "No rule matches that username."
-            else hits.map(r => s"${r.getString(0)} -> ${r.getString(1)}").mkString("; "))
-          } finally s.unpersist()
+          val hits = RuleEngine.namechk(spark, p.name.get, store).collect()
+          Some(if (hits.isEmpty) "No rule matches that username."
+          else hits.map(r => s"${r.getString(0)} -> ${r.getString(1)}").mkString("; "))
         case "seen" =>
           val path = new org.apache.hadoop.fs.Path(eventLogDir)
           val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
           if (!fs.exists(path)) Some("Username not seen recently")
           else {
-            val n = spark.read.parquet(eventLogDir)
+            val n = spark.read.schema(seenSchema).parquet(eventLogDir)
               .filter(col("username") === p.name.get).count()
             Some(if (n > 0) s"Seen: ${p.name.get} ($n events)" else "Username not seen recently")
           }
@@ -188,27 +219,28 @@ object GraftApp {
     val stop = new AtomicBoolean(false)
     val client = new ZulipClient(conf, zulipBaseUrlOverride)
 
-    // eventhandler.handle_events: per micro-batch, log events, reload the
-    // rule file, match, stamp deadlines, dispatch effectively-once
+    // eventhandler.handle_events: per micro-batch, log events, match against
+    // the rule snapshot, stamp deadlines, dispatch effectively-once
     val signups = NdjsonIngest.fromHttp(spark, feedUrl)
       .withColumn("event_id",
         graft.functions.Portable.hash64(concat_ws("|", col("username"),
           col("email"), col("ip"))))
       .withColumn("ts_us", unix_micros(current_timestamp()))
+    // a new app reads the store as it is on disk now
+    rulesLock.synchronized(snapshots.remove(rulesPath))
+    val dispatcher = new DelayedDispatcher(spark, pendingDir, logDir)
     val events = signups.writeStream
       .option("checkpointLocation", s"$workDir/checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
-        val rules = readRules(spark, rulesPath) // fresh snapshot per batch
         try {
           b.write.mode("append").parquet(eventLogDir) // the `seen` memory
-          val matched = RuleEngine.matches(b, rules)
+          val matched = RuleEngine.matches(b, rules(spark, rulesPath))
             .select(col("event_id"), col("name").as("rule_name"),
               col("username"), col("actions"), col("no_delay"), col("ts_us"))
             .withColumn("due_us", col("ts_us") + ActionSink.actionDelayUs(
               col("event_id"), col("actions"), col("no_delay")))
-          ActionSink.dispatchDelayedBatch(spark, matched, batchId, pendingDir,
-            logDir) { fresh =>
+          dispatcher.dispatch(matched, batchId) { fresh =>
             fresh.collect().foreach { r =>
               client.postMessage(
                 s"action ${r.getAs[String]("actions")} on ${r.getAs[String]("username")} " +
@@ -216,7 +248,7 @@ object GraftApp {
                 conf.zulipNotifyStream, conf.zulipNotifyTopic)
             }
           }
-        } finally { b.unpersist(); rules.unpersist() }
+        } finally b.unpersist()
         ()
       }
       .start()
@@ -241,19 +273,7 @@ object GraftApp {
         }
         if (!stop.get()) {
           try {
-            val now = Rules.nowUs
-            // notice decision + counter advance are one atomic store mutation;
-            // posting happens after the save (at-most-once notices, like the
-            // reference, which posts from the same pass that mutates state)
-            var notices = Array.empty[(String, String)]
-            mutateRules(spark, rulesPath) { cur =>
-              val noticed = RuleStore.sweepNotices(cur, now).localCheckpoint(true)
-              notices = noticed.filter(col("notice").isNotNull)
-                .select(col("name"), col("notice")).collect()
-                .map(r => (r.getString(0), r.getString(1)))
-              RuleStore.sweep(noticed.drop("notice"), now)
-            }
-            notices.foreach { case (name, notice) =>
+            sweepRules(spark, rulesPath, Rules.nowUs).foreach { case (name, notice) =>
               client.postMessage(s"Rule $name: $notice",
                 conf.zulipNotifyStream, conf.zulipNotifyTopic)
             }

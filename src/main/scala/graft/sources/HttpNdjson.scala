@@ -250,7 +250,7 @@ class HttpNdjsonMicroBatchStream(
   private def offer(line: String): Unit = {
     lastEventAtMs = System.currentTimeMillis()
     lock.synchronized {
-      buffer += ((line, System.currentTimeMillis() * 1000L))
+      if (!stopped) buffer += ((line, System.currentTimeMillis() * 1000L))
     }
   }
 
@@ -474,10 +474,12 @@ class HttpNdjsonMicroBatchStream(
     pruneReplay(n)
   }
 
+  /** Returns at once, even while the reader blocks in `readLine` on an open
+    * but silent feed: `disconnect()` would wait for the stream lock that
+    * read holds. The reader closes its connection itself when the read
+    * returns, and `offer` drops whatever line it brings. */
   override def stop(): Unit = {
-    stopped = true
-    val c = conn
-    if (c != null) c.disconnect() // unblocks a blocked readLine
+    lock.synchronized { stopped = true }
     reader.interrupt()
     watchdog.foreach(_.interrupt())
   }

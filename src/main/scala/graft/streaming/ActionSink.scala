@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Effectively-once action dispatch — the reference's rule-action firing
   * (rules.rs:286-331: matched signup → mod-API endpoint call, optionally
@@ -56,51 +59,28 @@ object ActionSink {
         (lit(30L) + pmod(xxhash64(eventId), lit(70L))) * lit(1000000L) +
           when(action === "close", lit(1500000L)).otherwise(lit(0L)))
 
-  /** Delayed effectively-once dispatch: rows are STAGED on arrival and only
-    * acted on once the event-time clock (max `ts_us` staged so far — the
-    * stream's own watermark) passes their `due_us` deadline. This executes
-    * the reference's randomized hold (eventhandler.rs:180-186 sleeps the
-    * spawned action task) without parking threads: at 100 TB the pending
-    * set is a partitioned parquet log and each micro-batch does one
-    * bounded anti-join + one due-filter, both pushed to the scan.
+  /** Delayed effectively-once dispatch: each row is acted on once the
+    * event-time clock (max `ts_us` matched so far — the stream's own
+    * watermark) reaches its `due_us` deadline. This executes the
+    * reference's randomized hold (eventhandler.rs:180-186 sleeps the
+    * spawned action task) without parking threads; one [[DelayedDispatcher]]
+    * per query carries the clock between batches.
     *
     * `matched` must carry `event_id`, `rule_name`, `ts_us`, and `due_us`
     * (= ts_us + [[actionDelayUs]]). Like the reference, an action with an
-    * unreached deadline survives a crash: it is re-staged from the pending
-    * log, not lost with the process. A tail event whose deadline no later
+    * unreached deadline survives a crash: it is held in the pending log,
+    * not lost with the process. A tail event whose deadline no later
     * event ever passes dispatches on the next batch after one arrives —
     * the event-time clock is the batch analog of wall-clock sleeping. */
   def dispatchDelayed(spark: SparkSession, matched: DataFrame, pendingDir: String,
-      logDir: String, checkpointDir: String)(act: DataFrame => Unit): StreamingQuery =
+      logDir: String, checkpointDir: String)(act: DataFrame => Unit): StreamingQuery = {
+    val dispatcher = new DelayedDispatcher(spark, pendingDir, logDir)
     matched.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dispatchDelayedBatch(spark, batch, batchId, pendingDir, logDir)(act)
+        dispatcher.dispatch(batch, batchId)(act)
       }
       .start()
-
-  /** One micro-batch of the delayed dispatch — exposed so a composition
-    * that must recompute per-batch state FIRST (GraftApp reloads the rule
-    * dim inside its own foreachBatch — a stream-static join would pin the
-    * rules file listing at plan time, the RecoverySpec finding) can reuse
-    * the staging/clock/dispatch contract verbatim. */
-  def dispatchDelayedBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-      pendingDir: String, logDir: String)(act: DataFrame => Unit): Unit = {
-    // stage fresh rows (replay-idempotent: anti-join the pending log)
-    undispatched(spark, batch, pendingDir).write.mode("append").parquet(pendingDir)
-    val pending = spark.read.parquet(pendingDir)
-    val clockRow = pending.agg(max(col("ts_us"))).head()
-    if (!clockRow.isNullAt(0)) { // an all-empty pending log has no clock yet
-      val due = pending.filter(col("due_us") <= clockRow.getLong(0))
-      val fresh = undispatched(spark, due, logDir)
-        .persist() // evaluated twice: act + log append
-      try {
-        act(fresh)
-        fresh.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(logDir)
-      } finally fresh.unpersist()
-    }
-    ()
   }
 
   /** Rows of `batch` not yet in the dispatch log (dedup within the batch,
@@ -112,7 +92,70 @@ object ActionSink {
     val path = new org.apache.hadoop.fs.Path(logDir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(path)) return deduped // no log yet: everything is fresh
-    val logged = spark.read.parquet(logDir).select(col("event_id"), col("rule_name"))
+    // the log holds rows of this shape: a known schema skips the footer scan
+    val logged = spark.read.schema(StructType(Seq(batch.schema("event_id"),
+      batch.schema("rule_name")))).parquet(logDir)
     deduped.join(logged, Seq("event_id", "rule_name"), "left_anti")
+  }
+}
+
+/** One query's delayed dispatch ([[ActionSink.dispatchDelayed]]; GraftApp
+  * builds one per start). Rows already due are acted on in the batch that
+  * matched them; only later ones are appended to the pending log, and that
+  * log is read back only once its earliest deadline is due. Every acted-on
+  * row still goes through [[ActionSink.undispatched]], and `act` runs before
+  * the log append, as in [[ActionSink.dispatch]].
+  *
+  * The clock and the earliest pending deadline are a cache of the logs: on
+  * its first batch a dispatcher seeds both from the pending rows not yet in
+  * the dispatch log, so a restart (or a fresh query on the same
+  * directories) neither fires a held row early nor loses one. Not
+  * thread-safe: a query calls [[dispatch]] from one thread, and a failed
+  * call fails its query, so a dispatcher never outlives a failed batch. */
+final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: String) {
+  private var seeded = false
+  private var clockUs = Long.MinValue // max ts_us matched so far
+  private var nextDueUs = Long.MaxValue // earliest deadline held in pending/
+
+  def dispatch(batch: DataFrame, batchId: Long)(act: DataFrame => Unit): Unit = {
+    val schema = batch.schema
+    def local(rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, schema)
+    def pending = spark.read.schema(schema).parquet(pendingDir)
+    if (!seeded) {
+      val path = new org.apache.hadoop.fs.Path(pendingDir)
+      if (path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)) {
+        val held = ActionSink.undispatched(spark, pending, logDir)
+          .agg(max(col("ts_us")), min(col("due_us"))).head()
+        if (!held.isNullAt(0)) { clockUs = held.getLong(0); nextDueUs = held.getLong(1) }
+      }
+      seeded = true
+    }
+    // one collect of the matches: the source's trigger window bounds them
+    val rows = batch.collect().toSeq
+    val (tsIdx, dueIdx) = (schema.fieldIndex("ts_us"), schema.fieldIndex("due_us"))
+    rows.foreach(r => clockUs = math.max(clockUs, r.getLong(tsIdx)))
+    val (dueNow, later) = rows.partition(_.getLong(dueIdx) <= clockUs)
+    if (later.nonEmpty) {
+      local(later).coalesce(1).write.mode("append").parquet(pendingDir)
+      nextDueUs = math.min(nextDueUs, later.map(_.getLong(dueIdx)).min)
+    }
+    val heldDue = nextDueUs <= clockUs
+    if (dueNow.isEmpty && !heldDue) return
+    val due =
+      if (!heldDue) local(dueNow)
+      else {
+        // a held deadline has passed: read the held rows back, and find the
+        // next deadline among those still waiting
+        val clock = clockUs
+        val next = pending.filter(col("due_us") > clock).agg(min(col("due_us"))).head()
+        nextDueUs = if (next.isNullAt(0)) Long.MaxValue else next.getLong(0)
+        local(dueNow).unionByName(pending.filter(col("due_us") <= clock))
+      }
+    val fresh = ActionSink.undispatched(spark, due, logDir).collect().toSeq
+    if (fresh.nonEmpty) {
+      act(local(fresh))
+      local(fresh).coalesce(1).withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(logDir)
+    }
   }
 }

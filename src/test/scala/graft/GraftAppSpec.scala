@@ -8,7 +8,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.rules.{RuleRow, Rules, RuleStore}
+import graft.rules.{RuleEngine, RuleRow, Rules, RuleStore}
 import graft.zulip.{ZulipConf, ZulipRtm}
 
 /** The whole reference program (main.rs:13-54) running as one composition
@@ -154,5 +154,149 @@ class GraftAppSpec extends AnyFunSuite {
       GraftApp.commandDispatcher(fresh, s"$work/rules.json", s"$work/events"))
     assert(reply("signup rules test `is_in_ip_range(ip, '127.0.0.0', '127.255.255.255')`")
       .contains("Result: true"))
+  }
+
+  private def rule(name: String, pattern: String, expiryUs: Option[Long] = None) =
+    RuleRow(name, "username_contains", pattern, 0, enabled = true, suspOnly = false,
+      noDelay = false, expiryUs, "notify")
+
+  /** The rules a micro-batch would match `username` against right now. */
+  private def matching(rulesPath: String, username: String): Set[String] = {
+    import spark.implicits._
+    val signup = Seq((1L, username, "u@x.example", "9.9.9.9", Option.empty[String],
+        Option.empty[String], false, 0L))
+      .toDF("event_id", "username", "email", "ip", "ua", "fingerprint", "susp_ip", "ts_us")
+    RuleEngine.matches(signup, GraftApp.rules(spark, rulesPath))
+      .select("name").collect().map(_.getString(0)).toSet
+  }
+
+  test("rule snapshot: a remove command reaches the next batch's match") {
+    val work = java.nio.file.Files.createTempDirectory("graft_snap_rm").toString
+    val rulesPath = s"$work/rules.json"
+    RuleStore.save(Rules.dfFor(spark, Seq(rule("r_mal", "mal"), rule("r_al", "al"))), rulesPath)
+    val reply = ZulipRtm.parseOrError(
+      GraftApp.commandDispatcher(spark, rulesPath, s"$work/events"))
+    assert(matching(rulesPath, "mal1") == Set("r_mal", "r_al"))
+    assert(reply("signup rules remove r_mal").contains("Rule r_mal removed."))
+    assert(matching(rulesPath, "mal1") == Set("r_al"))
+    assert(reply("signup rules list").contains("r_al"))
+  }
+
+  test("rule snapshot: a rule dropped by the expiry sweep stops matching") {
+    val work = java.nio.file.Files.createTempDirectory("graft_snap_sweep").toString
+    val rulesPath = s"$work/rules.json"
+    val dayUs = 86400L * 1000000L
+    RuleStore.save(Rules.dfFor(spark, Seq(
+      rule("r_soon", "mal", Some(Rules.nowUs + dayUs)), rule("r_kept", "al"))), rulesPath)
+    assert(matching(rulesPath, "mal1") == Set("r_soon", "r_kept"))
+    // five days on, r_soon is more than three days past its expiry
+    val notices = GraftApp.sweepRules(spark, rulesPath, Rules.nowUs + 5L * dayUs)
+    assert(notices == Seq("r_soon" -> "expiring_soon"))
+    assert(matching(rulesPath, "mal1") == Set("r_kept"))
+  }
+
+  test("rule snapshot: a failed save still forces a reload") {
+    val work = java.nio.file.Files.createTempDirectory("graft_snap_fail").toString
+    val rulesPath = s"$work/rules.json"
+    RuleStore.save(Rules.dfFor(spark, Seq(rule("r_old", "mal"))), rulesPath)
+    assert(matching(rulesPath, "mal1") == Set("r_old"))
+    // a save that died between deleting the old store and renaming the new
+    // one into place: the new rules are only in the staged dir
+    intercept[java.io.IOException] {
+      GraftApp.mutateRules(spark, rulesPath) { _ =>
+        Rules.dfFor(spark, Seq(rule("r_new", "mal"))).coalesce(1)
+          .write.json(rulesPath + ".staged")
+        val path = new org.apache.hadoop.fs.Path(rulesPath)
+        path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+        throw new java.io.IOException("rename failed")
+      }
+    }
+    assert(matching(rulesPath, "mal1") == Set("r_new"))
+  }
+
+  test("job budget: a steady micro-batch with matches and no holds runs at most 8 Spark jobs") {
+    val work = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    val rulesPath = s"$work/rules.json"
+    RuleStore.save(Rules.dfFor(spark, Seq(rule("r_mal", "mal"))), rulesPath)
+    val zulip = HttpServer.create(new InetSocketAddress("localhost", 0), 0)
+    zulip.createContext("/api/v1/register", (ex: HttpExchange) => {
+      try respond(ex, """{"result":"success","queue_id":"q-1"}""") finally ex.close()
+    })
+    zulip.createContext("/api/v1/events", (ex: HttpExchange) => {
+      try {
+        Thread.sleep(200)
+        respond(ex, """{"result":"success","events":[{"id":1,"type":"heartbeat"}]}""")
+      } finally ex.close()
+    })
+    val posts = new AtomicInteger(0)
+    zulip.createContext("/api/v1/messages", (ex: HttpExchange) => {
+      try {
+        ex.getRequestBody.readAllBytes(); posts.incrementAndGet()
+        respond(ex, """{"result":"success"}""")
+      } finally ex.close()
+    })
+    zulip.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+    zulip.start()
+    // one signup every 50 ms, every one matching r_mal (notify: no hold)
+    @volatile var feeding = true
+    val feed = HttpServer.create(new InetSocketAddress("localhost", 0), 0)
+    feed.createContext("/feed", (ex: HttpExchange) => {
+      try {
+        ex.sendResponseHeaders(200, 0)
+        val os = ex.getResponseBody
+        var n = 0
+        while (feeding) {
+          n += 1
+          os.write((s"""{"t":"signup","username":"mal$n","email":"m$n@x.example","ip":"9.9.$n.1"}""" +
+            "\n").getBytes(StandardCharsets.UTF_8))
+          os.flush()
+          Thread.sleep(50)
+        }
+        os.close()
+      } catch { case _: java.io.IOException => () } finally ex.close()
+    })
+    feed.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+    feed.start()
+
+    // Spark jobs per (query, micro-batch), from the job properties
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), AtomicInteger]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val q = p.getProperty("sql.streaming.queryId")
+          val b = p.getProperty("streaming.sql.batchId")
+          if (q != null && b != null)
+            jobs.computeIfAbsent((q, b.toLong), _ => new AtomicInteger).incrementAndGet()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val zport = zulip.getAddress.getPort
+    val conf = ZulipConf.default.copy(rulesPath = rulesPath, zulipBotToken = "tok",
+      zulipBotId = "bot@example.org", zulipBotUsername = "graftbot",
+      zulipCommandStream = "cmd", zulipCommandTopic = "cmd", zulipNotifyStream = "notify",
+      zulipNotifyTopic = "actions", zulipUrl = s"localhost:$zport")
+    val handles = GraftApp.start(spark, conf,
+      s"http://localhost:${feed.getAddress.getPort}/feed", work,
+      zulipBaseUrlOverride = Some(s"http://localhost:$zport"), sweepMs = 600000L)
+    try {
+      // steady state: batches after the first one, each with input (so with matches)
+      def steady = handles.events.recentProgress.filter(p => p.batchId > 0 && p.numInputRows > 0)
+      val deadline = System.currentTimeMillis() + 120000
+      while (steady.length < 5 && System.currentTimeMillis() < deadline) Thread.sleep(200)
+      val batches = steady.map(_.batchId).take(5)
+      assert(batches.length == 5, "five steady micro-batches")
+      Thread.sleep(500) // the listener bus delivers job starts asynchronously
+      val qid = handles.events.id.toString
+      val counts = batches.map(b => b -> Option(jobs.get((qid, b))).fold(0)(_.get)).toMap
+      assert(counts.values.forall(n => n > 0 && n <= 8), s"Spark jobs per batch: $counts")
+      assert(posts.get() > 0, "the matches were dispatched")
+      assert(!new java.io.File(s"$work/pending").exists(), "notify actions are never held")
+    } finally {
+      feeding = false
+      spark.sparkContext.removeSparkListener(listener)
+      handles.shutdown()
+      zulip.stop(0)
+      feed.stop(0)
+    }
   }
 }

@@ -277,6 +277,37 @@ class HttpSourceSpec extends AnyFunSuite {
     } finally { q.stop(); server.stop(0) }
   }
 
+  test("stop() returns at once on an open but silent feed, and no later line is buffered") {
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val (server, url) = serve("/quiet") { (hit, ex) =>
+      if (hit == 1) {
+        ex.sendResponseHeaders(200, 0)
+        val os = ex.getResponseBody
+        os.write("{\"a\":1}\n".getBytes(StandardCharsets.UTF_8)); os.flush()
+        release.await(30, java.util.concurrent.TimeUnit.SECONDS) // silent, held open
+        try {
+          os.write("{\"a\":2}\n".getBytes(StandardCharsets.UTF_8)); os.flush(); os.close()
+        } catch { case _: java.io.IOException => () }
+      } else chunked(ex, Nil)
+    }
+    val s = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
+      reconnectDelayMs = 100, readTimeoutMs = 0, numPartitions = 1,
+      maxLinesPerTrigger = Long.MaxValue)
+    try {
+      val deadline = System.currentTimeMillis() + 10000
+      while (s.latestOffset() != sources.HttpLineOffset(1) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(s.latestOffset() == sources.HttpLineOffset(1), "first line must arrive")
+      val t0 = System.nanoTime()
+      s.stop() // the reader is blocked in readLine on the silent stream
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 1000, s"stop() took $ms ms on a silent feed")
+      release.countDown() // the feed speaks again: the stopped reader drops it
+      Thread.sleep(300)
+      assert(s.latestOffset() == sources.HttpLineOffset(1), "no line after stop")
+    } finally { release.countDown(); server.stop(0) }
+  }
+
   test("full reference program live: HTTP tap -> rule engine -> matched actions") {
     // r_email_contains ('@MAIL3', ci, no expiry) must fire for the first
     // signup; the second matches no standing rule

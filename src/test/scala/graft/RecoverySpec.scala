@@ -219,6 +219,79 @@ class RecoverySpec extends AnyFunSuite {
     assert(spark.read.parquet(logDir).count() == 3, "effectively-once after restart")
   }
 
+  /** Matches as GraftApp stamps them: `due_us` = `ts_us` + the action delay. */
+  private def matches(rows: (Long, String, String, Long)*) = {
+    import spark.implicits._
+    rows.toDF("event_id", "rule_name", "actions", "ts_us")
+      .withColumn("due_us", col("ts_us") + graft.streaming.ActionSink.actionDelayUs(
+        col("event_id"), col("actions"), lit(false)))
+  }
+
+  /** A dispatcher's `act` that records the event ids it is handed. */
+  private final class Acted {
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def apply(df: org.apache.spark.sql.DataFrame): Unit =
+      ids ++= df.select("event_id").collect().map(_.getLong(0))
+  }
+
+  private def exists(dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  test("DelayedDispatcher: a held close survives a restart and fires once, after its deadline") {
+    import graft.streaming.DelayedDispatcher
+    val pendingDir = tmp("held_pend") + "/pending"
+    val logDir = tmp("held_log") + "/log"
+    val acted = new Acted
+    // deadline of a close at t=0: somewhere in [31.5, 101.5) s
+    new DelayedDispatcher(spark, pendingDir, logDir)
+      .dispatch(matches((1L, "r_close", "close", 0L)), 0L)(acted(_))
+    assert(acted.ids.isEmpty && spark.read.parquet(pendingDir).count() == 1)
+
+    // restart: a new dispatcher on the same logs
+    val d2 = new DelayedDispatcher(spark, pendingDir, logDir)
+    d2.dispatch(matches((2L, "r_notify", "notify", 10000000L)), 1L)(acted(_))
+    assert(acted.ids == Seq(2L), "the clock (10 s) is before the close's deadline")
+    d2.dispatch(matches((3L, "r_notify", "notify", 200000000L)), 2L)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L), "the clock (200 s) passed the deadline")
+    d2.dispatch(matches((4L, "r_notify", "notify", 300000000L)), 3L)(acted(_))
+    new DelayedDispatcher(spark, pendingDir, logDir)
+      .dispatch(matches((5L, "r_notify", "notify", 400000000L)), 4L)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L, 4L, 5L), s"the close fired once: ${acted.ids}")
+  }
+
+  test("DelayedDispatcher: notify-only batches never create the pending log") {
+    val pendingDir = tmp("notify_pend") + "/pending"
+    val logDir = tmp("notify_log") + "/log"
+    val acted = new Acted
+    val d = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+    d.dispatch(matches((1L, "r_a", "notify", 0L), (2L, "r_b", "alt", 5L)), 0L)(acted(_))
+    d.dispatch(matches((3L, "r_a", "notify", 10L)), 1L)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L))
+    assert(!exists(pendingDir), "nothing was held, so nothing was staged")
+    assert(spark.read.parquet(logDir).count() == 3)
+  }
+
+  test("DelayedDispatcher: an in-batch duplicate fires once; a replay on a fresh dispatcher fires nothing") {
+    val pendingDir = tmp("dup_pend") + "/pending"
+    val logDir = tmp("dup_log") + "/log"
+    val acted = new Acted
+    val batches = Seq(
+      matches((1L, "r_a", "notify", 0L), (1L, "r_a", "notify", 0L),
+        (2L, "r_close", "close", 0L), (2L, "r_close", "close", 0L)),
+      matches((3L, "r_a", "notify", 200000000L)))
+    val d = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+    batches.zipWithIndex.foreach { case (b, i) => d.dispatch(b, i.toLong)(acted(_)) }
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"each match fires once: ${acted.ids}")
+
+    // at-least-once delivery replays both batches into a new query
+    val replay = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+    batches.zipWithIndex.foreach { case (b, i) => replay.dispatch(b, i.toLong)(acted(_)) }
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"the replay fired again: ${acted.ids}")
+    assert(spark.read.parquet(logDir).count() == 3)
+  }
+
   test("ActionSink.dispatch end-to-end over a streaming source") {
     val srcDir = splitEvents()
     val logDir = tmp("dispatch_e2e") + "/log"

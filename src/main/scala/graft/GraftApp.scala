@@ -21,8 +21,8 @@ import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
   *
   *   - `eventstream::watch_event_stream` → the `http-ndjson` DataSourceV2
   *     signup stream ([[NdjsonIngest.fromHttp]]), silence-supervised by the
-  *     source itself (status.rs:36-45's 90 s watchdog as
-  *     `silenceRestartMs`).
+  *     source itself (status.rs:36-45's 90 s watchdog, the source's
+  *     default `silenceRestartMs`).
   *   - `eventhandler::handle_events` → a foreachBatch loop that logs the
   *     batch for `seen`, matches it via the broadcast rule join against the
   *     in-memory rule snapshot (the reference's rule vector; rebuilt from the

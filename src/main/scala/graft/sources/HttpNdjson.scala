@@ -4,6 +4,7 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 import java.util
+import java.util.Optional
 import javax.annotation.concurrent.GuardedBy
 
 import scala.collection.mutable.ListBuffer
@@ -14,7 +15,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,23 +29,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * {{{
   *   spark.readStream.format("http-ndjson")
   *     .option("url", "http://host/api/stream/event")
-  *     .option("mode", "ndjson")          // or "sse" (data: framing)
-  *     .option("reconnectDelayMs", 7000)  // reference backoff, eventstream.rs:69
-  *     .load()                            // => value STRING, recv_ts TIMESTAMP
+  *     .option("mode", "ndjson")            // or "sse" (data: framing)
+  *     .option("reconnectDelayMs", 7000)    // reference backoff, eventstream.rs:69
+  *     .option("silenceRestartMs", 90000)   // event-silence restart, 0 = off
+  *     .option("silenceTimeoutMs", 90000)   // byte-level read timeout, 0 = none
+  *     .option("maxLinesPerTrigger", 1000)  // at most BufferCap / 2
+  *     .load()                              // => value STRING, recv_ts TIMESTAMP
   * }}}
   *
-  * A background thread owns the HTTP connection and accumulates lines; each
-  * micro-batch drains a [start, end) slice by line count, and `commit` trims
-  * the buffer. Unlike Spark's built-in text-socket source (driver-buffered,
-  * non-replayable), every PLANNED batch is also persisted under the query's
-  * checkpoint dir (`<checkpoint>/graft-replay/<start>-<end>`, written before
-  * the batch is handed to the engine, pruned at commit) — so a restarted
-  * query re-reads the last uncommitted batch IDENTICALLY instead of losing
-  * it, and the stop/restart contract is no-loss/no-dup for every line the
-  * engine ever saw. What replay cannot cover is lines the FEED emitted while
-  * no process was connected — that gap needs a durable broker (Kafka) in
-  * front of the feed; this connector is the direct-tap equivalent of the
-  * reference's process. Opt out with `.option("replay", "false")`.
+  * A background thread owns the HTTP connection and appends lines to a
+  * buffer of at most [[HttpNdjson.BufferCap]] lines; when it is full the
+  * reader waits, which pushes back on the feed through TCP instead of
+  * dropping lines. The engine owns batch sizes (`SupportsAdmissionControl`):
+  * each micro-batch drains a [start, end) slice by line count, and `commit`
+  * trims the buffer. Unlike Spark's built-in text-socket source
+  * (driver-buffered, non-replayable), every PLANNED batch is also persisted
+  * under the query's checkpoint dir (`<checkpoint>/graft-replay/<start>-<end>`,
+  * written before the batch is handed to the engine, pruned at commit) — so
+  * a restarted query re-reads the last uncommitted batch IDENTICALLY
+  * instead of losing it, and the stop/restart contract is no-loss/no-dup for
+  * every line the engine ever saw. What replay cannot cover is lines the
+  * FEED emitted while no process was connected — that gap needs a durable
+  * broker (Kafka) in front of the feed; this connector is the direct-tap
+  * equivalent of the reference's process.
   */
 class HttpNdjsonSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "http-ndjson"
@@ -59,6 +66,13 @@ object HttpNdjson {
   val schema: StructType = StructType(Seq(
     StructField("value", StringType),
     StructField("recv_ts", TimestampType)))
+
+  /** Lines the reader may hold before it stops reading the feed. The read
+    * limit is at most half of it: Spark commits batch N only after it plans
+    * N+1, so a full buffer must still hold a next batch to plan. */
+  val BufferCap = 65536
+  val Partitions = 2 // input partitions per micro-batch
+  val SilenceRestartMs = 90000L // the reference's event-silence threshold (status.rs)
 }
 
 class HttpNdjsonTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
@@ -67,34 +81,27 @@ class HttpNdjsonTable(options: CaseInsensitiveStringMap) extends Table with Supp
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = HttpNdjson.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new HttpNdjsonMicroBatchStream(
-            url = Option(options.get("url")).getOrElse(
-              throw new IllegalArgumentException("http-ndjson requires option 'url'")),
-            sse = options.getOrDefault("mode", "ndjson").equalsIgnoreCase("sse"),
-            reconnectDelayMs = options.getLong("reconnectDelayMs", 7000L),
-            // silent-stream watchdog (status.rs: restart if no event for
-            // 90 s): a read blocked longer than this times out and the
-            // reader reconnects. 0 = wait forever.
-            readTimeoutMs = options.getLong("silenceTimeoutMs",
-              options.getLong("readTimeoutMs", 0L)).toInt,
-            numPartitions = options.getInt("numPartitions", 2),
-            maxLinesPerTrigger = options.getLong("maxLinesPerTrigger", Long.MaxValue),
-            // EVENT-silence supervisor (status.rs:20-68): restart the
-            // connection when no event arrived for this long, checked on a
-            // fixed cadence (status.rs:73 pings every 15 s against a 90 s
-            // threshold). Distinct from readTimeoutMs: SSE keepalive
-            // comments reset a byte-level read timeout but are not events.
-            // 0 = disabled.
-            silenceRestartMs = options.getLong("silenceRestartMs", 0L),
-            silenceCheckMs = options.getLong("silenceCheckMs", 15000L),
-            replayDir =
-              if (options.getBoolean("replay", true))
-                Some(s"$checkpointLocation/graft-replay")
-              else None)
+    new ScanBuilder with Scan {
+      override def build(): Scan = this
+      override def readSchema(): StructType = HttpNdjson.schema
+      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+        val silenceRestartMs = options.getLong("silenceRestartMs", HttpNdjson.SilenceRestartMs)
+        new HttpNdjsonMicroBatchStream(
+          url = Option(options.get("url")).getOrElse(
+            throw new IllegalArgumentException("http-ndjson requires option 'url'")),
+          sse = options.getOrDefault("mode", "ndjson").equalsIgnoreCase("sse"),
+          reconnectDelayMs = options.getLong("reconnectDelayMs", 7000L),
+          // byte-level watchdog: the reader reconnects after a read blocked
+          // this long (0 = never). Defaults to silenceRestartMs: disconnect()
+          // cannot end a read on a feed that sends no bytes at all.
+          readTimeoutMs = options.getLong("silenceTimeoutMs", silenceRestartMs).toInt,
+          maxLinesPerTrigger = options.getLong("maxLinesPerTrigger", Long.MaxValue),
+          // EVENT-silence supervisor (status.rs:20-68): restart the
+          // connection when no event arrived for this long. Distinct from
+          // silenceTimeoutMs: SSE keepalive comments reset a byte-level
+          // read timeout but are not events. 0 = disabled.
+          silenceRestartMs = silenceRestartMs,
+          replayDir = Some(s"$checkpointLocation/graft-replay"))
       }
     }
 }
@@ -109,38 +116,30 @@ class HttpNdjsonMicroBatchStream(
     sse: Boolean,
     reconnectDelayMs: Long,
     readTimeoutMs: Int,
-    numPartitions: Int,
     maxLinesPerTrigger: Long,
-    silenceRestartMs: Long = 0L,
-    silenceCheckMs: Long = 15000L,
-    replayDir: Option[String] = None) extends MicroBatchStream with Logging {
+    silenceRestartMs: Long = HttpNdjson.SilenceRestartMs,
+    replayDir: Option[String] = None)
+  extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics
+  with Logging {
 
   private val lock = new Object
   // lines [baseOffset, baseOffset + buffer.size); commit(n) trims below n
   @GuardedBy("lock") private val buffer = new ListBuffer[(String, Long)]
   @GuardedBy("lock") private var baseOffset = 0L
-  // rate-limit window tracks the last PLANNED end, not the committed base:
-  // Spark commits batch N only after planning N+1, so capping against the
-  // committed offset would freeze the stream after one micro-batch
-  @GuardedBy("lock") private var plannedEnd = 0L
   @GuardedBy("lock") private var connects = 0
+  @GuardedBy("lock") private var blocked = false // `offer` waits for room
   @volatile private var stopped = false
   @volatile private var lastError: Throwable = _
   @volatile private var consecutiveFailures = 0
   @volatile private var conn: HttpURLConnection = _
 
-  /** Reconnect count — observable for tests and monitoring. */
-  def connectCount: Int = lock.synchronized(connects)
-
   // ---- event-silence supervisor (status.rs:20-68) --------------------------
   // Tracks the last EVENT (offered line), not the last byte: a connection
   // kept alive by SSE comments or TCP keepalives while the feed is dead is
-  // exactly the failure the reference's status loop restarts on.
+  // exactly the failure the reference's status loop restarts on. Time the
+  // reader spends waiting on a full buffer is the engine's lag, not silence.
   @volatile private var lastEventAtMs = System.currentTimeMillis()
-  @volatile private var silenceRestartsCount = 0
-
-  /** Watchdog-forced restarts — observable for tests and monitoring. */
-  def silenceRestarts: Int = silenceRestartsCount
+  @volatile private var silenceRestarts = 0
 
   private val watchdog: Option[Thread] =
     if (silenceRestartMs <= 0) None
@@ -148,16 +147,15 @@ class HttpNdjsonMicroBatchStream(
       setDaemon(true)
       override def run(): Unit = {
         while (!stopped) {
-          try Thread.sleep(silenceCheckMs)
+          try Thread.sleep(math.max(1L, silenceRestartMs / 6)) // status.rs:73: 15 s at 90 s
           catch { case _: InterruptedException => return }
-          if (!stopped &&
-              System.currentTimeMillis() - lastEventAtMs > silenceRestartMs) {
+          if (lock.synchronized(!stopped && !blocked &&
+              System.currentTimeMillis() - lastEventAtMs > silenceRestartMs)) {
             logWarning(s"http-ndjson: no event for >$silenceRestartMs ms — " +
               "restarting event stream watcher")
-            silenceRestartsCount += 1
+            silenceRestarts += 1
             lastEventAtMs = System.currentTimeMillis() // status.rs:38 resets the clock
-            val c = conn
-            if (c != null) c.disconnect() // reader loop reconnects after backoff
+            Option(conn).foreach(_.disconnect()) // reader loop reconnects after backoff
           }
         }
       }
@@ -166,7 +164,7 @@ class HttpNdjsonMicroBatchStream(
   private val reader = new Thread(s"http-ndjson-$url") {
     setDaemon(true)
     override def run(): Unit = {
-      while (!stopped) {
+      try while (!stopped) {
         try {
           val c = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
           conn = c
@@ -211,7 +209,7 @@ class HttpNdjsonMicroBatchStream(
         }
         // stream ended or failed: the reference retries after a fixed pause
         if (!stopped) Thread.sleep(reconnectDelayMs)
-      }
+      } catch { case _: InterruptedException if stopped => () } // stop() cut a pause short
     }
   }
   // Resume the line numbering where the previous process stopped — BEFORE
@@ -230,10 +228,7 @@ class HttpNdjsonMicroBatchStream(
         j.names().foreach(n => parseWindow(n).foreach { case (_, b) =>
           resume = math.max(resume, b)
         })
-        if (resume > 0L) lock.synchronized {
-          baseOffset = resume
-          plannedEnd = resume
-        }
+        if (resume > 0L) lock.synchronized { baseOffset = resume }
       } catch {
         case e0: Throwable =>
           // degraded: the deserializeOffset rebase heuristic still prevents
@@ -247,11 +242,13 @@ class HttpNdjsonMicroBatchStream(
   reader.start()
   watchdog.foreach(_.start())
 
-  private def offer(line: String): Unit = {
+  /** Append one event; waits while the buffer is full, drops it after `stop`. */
+  private def offer(line: String): Unit = lock.synchronized {
+    blocked = true
+    while (buffer.size >= HttpNdjson.BufferCap && !stopped) lock.wait()
+    blocked = false
     lastEventAtMs = System.currentTimeMillis()
-    lock.synchronized {
-      if (!stopped) buffer += ((line, System.currentTimeMillis() * 1000L))
-    }
+    if (!stopped) buffer += ((line, lastEventAtMs * 1000L))
   }
 
   // ---- checkpoint-backed batch replay ---------------------------------------
@@ -268,8 +265,6 @@ class HttpNdjsonMicroBatchStream(
 
   private lazy val journal: Option[HttpReplayJournal] =
     replayDir.map(HttpReplayJournal.open)
-
-  private def windowName(s: Long, e: Long) = s"$s-$e"
 
   private def parseWindow(name: String): Option[(Long, Long)] =
     name.split("-") match {
@@ -293,7 +288,7 @@ class HttpNdjsonMicroBatchStream(
   private def writeReplay(s: Long, e: Long, slice: Array[(String, Long)]): Unit =
     journal.foreach { j =>
       try {
-        val name = windowName(s, e)
+        val name = s"$s-$e"
         if (!j.exists(name)) j.writeAtomic(name, slice.iterator.map(encodeRow))
       } catch {
         case e0: Throwable =>
@@ -351,10 +346,7 @@ class HttpNdjsonMicroBatchStream(
       // window the new instance never buffered: planInputPartitions slices
       // empty, and commit() then silently discards the first post-restart
       // batch of real lines
-      if (n > baseOffset + buffer.size) {
-        baseOffset = n
-        plannedEnd = math.max(plannedEnd, n)
-      }
+      if (n > baseOffset + buffer.size) baseOffset = n
     }
     HttpLineOffset(n)
   }
@@ -364,16 +356,36 @@ class HttpNdjsonMicroBatchStream(
     * should surface a dead endpoint to its monitoring). */
   private val maxConsecutiveFailures = 8
 
-  override def latestOffset(): Offset = lock.synchronized {
+  /** Everything buffered, whatever the read limit. */
+  override def latestOffset(): Offset =
+    latestOffset(initialOffset(), ReadLimit.allAvailable())
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = lock.synchronized {
     if (consecutiveFailures >= maxConsecutiveFailures)
       throw new IllegalStateException(
         s"http-ndjson: $consecutiveFailures consecutive connect failures to $url",
         lastError)
-    val avail = baseOffset + buffer.size
-    val window = math.max(plannedEnd, baseOffset) + maxLinesPerTrigger
-    plannedEnd = math.max(plannedEnd, math.min(avail, if (window < 0) Long.MaxValue else window))
-    HttpLineOffset(math.max(plannedEnd, baseOffset))
+    val from = math.max(start.asInstanceOf[HttpLineOffset].n, baseOffset)
+    val rows = limit match {
+      case m: ReadMaxRows => m.maxRows
+      case _ => Long.MaxValue
+    }
+    HttpLineOffset(from + math.max(0L, math.min(baseOffset + buffer.size - from, rows)))
   }
+
+  override def getDefaultReadLimit: ReadLimit =
+    ReadLimit.maxRows(math.min(maxLinesPerTrigger, HttpNdjson.BufferCap / 2))
+
+  /** The buffered end, so each progress event shows the engine's lag. */
+  override def reportLatestOffset(): Offset =
+    lock.synchronized(HttpLineOffset(baseOffset + buffer.size))
+
+  override def metrics(latestConsumedOffset: Optional[Offset]): util.Map[String, String] =
+    lock.synchronized(util.Map.of(
+      "bufferedLines", buffer.size.toString,
+      "connects", connects.toString,
+      "silenceRestarts", silenceRestarts.toString,
+      "consecutiveFailures", consecutiveFailures.toString))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (s, e) = (start.asInstanceOf[HttpLineOffset].n, end.asInstanceOf[HttpLineOffset].n)
@@ -433,7 +445,7 @@ class HttpNdjsonMicroBatchStream(
       case (None, None) => Array.empty[(String, Long)] // unreachable
     }
     if (slice.isEmpty) return Array.empty
-    val k = math.max(1, math.min(numPartitions, slice.length))
+    val k = math.max(1, math.min(HttpNdjson.Partitions, slice.length))
     slice.grouped((slice.length + k - 1) / k)
       .map(g => HttpLinesPartition(g): InputPartition).toArray
   }
@@ -469,17 +481,17 @@ class HttpNdjsonMicroBatchStream(
     lock.synchronized {
       val drop = (n - baseOffset).toInt
       if (drop > 0) { buffer.remove(0, math.min(drop, buffer.size)); baseOffset = n }
+      lock.notifyAll() // room for a reader waiting in `offer`
     }
     persistCommitted(n)
     pruneReplay(n)
   }
 
-  /** Returns at once, even while the reader blocks in `readLine` on an open
-    * but silent feed: `disconnect()` would wait for the stream lock that
-    * read holds. The reader closes its connection itself when the read
-    * returns, and `offer` drops whatever line it brings. */
+  /** Returns at once: `offer` drops any line after it, and the reader closes
+    * its own connection (`disconnect()` here would wait for the stream lock
+    * that a read blocked on a silent feed holds). */
   override def stop(): Unit = {
-    lock.synchronized { stopped = true }
+    lock.synchronized { stopped = true; lock.notifyAll() }
     reader.interrupt()
     watchdog.foreach(_.interrupt())
   }
@@ -501,7 +513,11 @@ case class HttpLinesPartition(rows: Array[(String, Long)]) extends InputPartitio
 private[sources] sealed trait HttpReplayJournal {
   def names(): Seq[String]
   def exists(name: String): Boolean
-  def readLines(name: String): Seq[String]
+  protected def input(name: String): java.io.InputStream
+  def readLines(name: String): Seq[String] = {
+    val src = scala.io.Source.fromInputStream(input(name), "UTF-8")
+    try src.getLines().toVector finally src.close()
+  }
   /** Write-then-rename; an existing target is REPLACED. */
   def writeAtomic(name: String, lines: Iterator[String]): Unit
   def delete(name: String): Unit
@@ -521,17 +537,9 @@ private[sources] object HttpReplayJournal {
 private final class NioReplayJournal(dir: java.nio.file.Path) extends HttpReplayJournal {
   import java.nio.file.{Files, StandardCopyOption}
   override def names(): Seq[String] =
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      val s = Files.list(dir)
-      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-      finally s.close()
-    }
+    Option(dir.toFile.list()).fold(Seq.empty[String])(_.toSeq) // null: no dir yet
   override def exists(name: String): Boolean = Files.exists(dir.resolve(name))
-  override def readLines(name: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    Files.readAllLines(dir.resolve(name), StandardCharsets.UTF_8).asScala.toSeq
-  }
+  override protected def input(name: String) = Files.newInputStream(dir.resolve(name))
   override def writeAtomic(name: String, lines: Iterator[String]): Unit = {
     Files.createDirectories(dir)
     val tmp = dir.resolve(s"._$name.tmp")
@@ -553,16 +561,7 @@ private final class HadoopReplayJournal(dir: String) extends HttpReplayJournal {
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq.map(_.getPath.getName)
   override def exists(name: String): Boolean = fs.exists(new Path(root, name))
-  override def readLines(name: String): Seq[String] = {
-    val in = new BufferedReader(
-      new InputStreamReader(fs.open(new Path(root, name)), StandardCharsets.UTF_8))
-    try {
-      val out = new ListBuffer[String]
-      var l = in.readLine()
-      while (l != null) { out += l; l = in.readLine() }
-      out.toSeq
-    } finally in.close()
-  }
+  override protected def input(name: String) = fs.open(new Path(root, name))
   override def writeAtomic(name: String, lines: Iterator[String]): Unit = {
     val tmp = new Path(root, s"._$name.tmp")
     val dst = new Path(root, name)

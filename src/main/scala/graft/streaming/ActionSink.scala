@@ -4,45 +4,30 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Effectively-once action dispatch — the reference's rule-action firing
   * (rules.rs:286-331: matched signup → mod-API endpoint call, optionally
-  * delayed) as a restart-safe Spark sink.
+  * delayed) as a restart-safe step of a `foreachBatch` sink
+  * ([[DelayedDispatcher]], which GraftApp runs on every micro-batch).
   *
   * Structured Streaming's `foreachBatch` is at-least-once across restarts:
   * a batch that dispatched but crashed before the commit re-runs. The
   * dispatcher makes the side effect idempotent the standard way — an
   * append-only dispatch log keyed by (event_id, rule_name); each batch
-  * anti-joins the log before acting, so replays of LOGGED rows are no-ops.
-  * The remaining window is a crash BETWEEN `act` and the log append: that
-  * batch's fresh rows re-dispatch once on restart (dispatch-then-log keeps
-  * at-least-once — the reference's mod-API calls are idempotent bans/marks,
-  * where a duplicate POST is harmless and a LOST one is not; logging first
-  * would invert that into at-most-once). The log carries `batch_id` as the
-  * audit trail the reference keeps implicitly in Zulip history.
+  * anti-joins the log ([[undispatched]]) before acting, so replays of
+  * LOGGED rows are no-ops. The remaining window is a crash BETWEEN `act`
+  * and the log append: that batch's fresh rows re-dispatch once on restart
+  * (dispatch-then-log keeps at-least-once — the reference's mod-API calls
+  * are idempotent bans/marks, where a duplicate POST is harmless and a LOST
+  * one is not; logging first would invert that into at-most-once). The log
+  * carries `batch_id` as the audit trail the reference keeps implicitly in
+  * Zulip history.
   *
   * `act` stands in for the HTTP call (the reference's POST to the mod API);
   * it receives only rows never dispatched before.
   */
 object ActionSink {
-
-  def dispatch(spark: SparkSession, matched: DataFrame, logDir: String,
-      checkpointDir: String)(act: DataFrame => Unit): StreamingQuery =
-    matched.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = undispatched(spark, batch, logDir)
-          .persist() // evaluated twice: act + log append
-        try {
-          act(fresh)
-          fresh.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(logDir)
-        } finally fresh.unpersist()
-        ()
-      }
-      .start()
 
   /** Deterministic analog of the reference's randomized action delay
     * (eventhandler.rs:115: `thread_rng().gen_range(30..100) * 1000` ms,
@@ -58,30 +43,6 @@ object ActionSink {
       .otherwise(
         (lit(30L) + pmod(xxhash64(eventId), lit(70L))) * lit(1000000L) +
           when(action === "close", lit(1500000L)).otherwise(lit(0L)))
-
-  /** Delayed effectively-once dispatch: each row is acted on once the
-    * event-time clock (max `ts_us` matched so far — the stream's own
-    * watermark) reaches its `due_us` deadline. This executes the
-    * reference's randomized hold (eventhandler.rs:180-186 sleeps the
-    * spawned action task) without parking threads; one [[DelayedDispatcher]]
-    * per query carries the clock between batches.
-    *
-    * `matched` must carry `event_id`, `rule_name`, `ts_us`, and `due_us`
-    * (= ts_us + [[actionDelayUs]]). Like the reference, an action with an
-    * unreached deadline survives a crash: it is held in the pending log,
-    * not lost with the process. A tail event whose deadline no later
-    * event ever passes dispatches on the next batch after one arrives —
-    * the event-time clock is the batch analog of wall-clock sleeping. */
-  def dispatchDelayed(spark: SparkSession, matched: DataFrame, pendingDir: String,
-      logDir: String, checkpointDir: String)(act: DataFrame => Unit): StreamingQuery = {
-    val dispatcher = new DelayedDispatcher(spark, pendingDir, logDir)
-    matched.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dispatcher.dispatch(batch, batchId)(act)
-      }
-      .start()
-  }
 
   /** Rows of `batch` not yet in the dispatch log (dedup within the batch,
     * then anti-join against the log). Only a genuinely ABSENT log means
@@ -99,12 +60,19 @@ object ActionSink {
   }
 }
 
-/** One query's delayed dispatch ([[ActionSink.dispatchDelayed]]; GraftApp
-  * builds one per start). Rows already due are acted on in the batch that
-  * matched them; only later ones are appended to the pending log, and that
-  * log is read back only once its earliest deadline is due. Every acted-on
-  * row still goes through [[ActionSink.undispatched]], and `act` runs before
-  * the log append, as in [[ActionSink.dispatch]].
+/** One query's delayed effectively-once dispatch (GraftApp builds one per
+  * start). Each row is acted on once the event-time clock (max `ts_us`
+  * matched so far — the stream's own watermark) reaches its `due_us`
+  * deadline (= ts_us + [[ActionSink.actionDelayUs]]): this executes the
+  * reference's randomized hold (eventhandler.rs:180-186 sleeps the spawned
+  * action task) without parking threads. Rows already due are acted on in
+  * the batch that matched them; only later ones are appended to the pending
+  * log, and that log is read back only once its earliest deadline is due.
+  * Like the reference, an action with an unreached deadline survives a
+  * crash: it is held in the pending log, not lost with the process. A tail
+  * event whose deadline no later event ever passes dispatches on the next
+  * batch after one arrives. Every acted-on row goes through
+  * [[ActionSink.undispatched]], and `act` runs before the log append.
   *
   * The clock and the earliest pending deadline are a cache of the logs: on
   * its first batch a dispatcher seeds both from the pending rows not yet in

@@ -9,11 +9,12 @@ import org.apache.spark.sql.types._
   * The reference opens a chunked HTTPS response, splits chunks on newlines,
   * JSON-decodes each line (logging and skipping malformed ones), and tags a
   * liveness ping per chunk. The Spark-first form: any line-oriented
-  * streaming source (`socket` here — the built-in DSv2 text-socket stream;
-  * Kafka in production) → `from_json` with the signup schema → malformed
-  * lines surface as null structs and are split off to a dead-letter branch
-  * instead of silently dropped. Reconnect/backoff (the reference's 7 s
-  * retry loop) is the source's restart policy, not program logic.
+  * streaming source with a `value` column (`http-ndjson` here, see
+  * [[fromHttp]]; Kafka in production) → `from_json` with the signup schema
+  * → malformed lines surface as null structs and are split off to a
+  * dead-letter branch instead of silently dropped. Reconnect/backoff (the
+  * reference's 7 s retry loop) and the 90 s event-silence restart are the
+  * source's restart policy, not program logic.
   */
 object NdjsonIngest {
 
@@ -44,22 +45,14 @@ object NdjsonIngest {
         (col("j").isNull || col("j.t").isNull ||
           (col("j.t") === "signup" && col("j.username").isNull)).as("malformed"))
 
-  /** Signup events from a live socket (NDJSON lines). */
-  def fromSocket(spark: SparkSession, host: String, port: Int): DataFrame =
-    parse(spark.readStream.format("socket")
-      .option("host", host).option("port", port).load())
-      .filter(!col("malformed") && col("t") === "signup")
-      .drop("malformed", "raw", "t")
-
   /** Signup events straight off the HTTP chunked NDJSON feed — the exact
     * shape of the reference's ingest (eventstream.rs:14-73), via the custom
     * `http-ndjson` DataSourceV2 source (graft.sources.HttpNdjsonSourceProvider)
-    * with the reference's 7 s reconnect backoff as the default. */
-  def fromHttp(spark: SparkSession, url: String,
-      reconnectDelayMs: Long = 7000L, sse: Boolean = false): DataFrame =
+    * with the reference's 7 s reconnect backoff and 90 s event-silence
+    * restart as the defaults. */
+  def fromHttp(spark: SparkSession, url: String, reconnectDelayMs: Long = 7000L): DataFrame =
     parse(spark.readStream.format("http-ndjson")
       .option("url", url)
-      .option("mode", if (sse) "sse" else "ndjson")
       .option("reconnectDelayMs", reconnectDelayMs)
       .load())
       .filter(!col("malformed") && col("t") === "signup")

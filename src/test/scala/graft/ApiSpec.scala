@@ -164,6 +164,16 @@ class ApiSpec extends AnyFunSuite {
     assert(parsed(4)._2, "untagged payload is a dead letter")
   }
 
+  /** Signup events from a live socket (NDJSON lines), filtered as
+    * [[graft.streaming.NdjsonIngest.fromHttp]] filters the HTTP feed. */
+  private def fromSocket(host: String, port: Int) = {
+    import org.apache.spark.sql.functions.col
+    graft.streaming.NdjsonIngest.parse(spark.readStream.format("socket")
+      .option("host", host).option("port", port).load())
+      .filter(!col("malformed") && col("t") === "signup")
+      .drop("malformed", "raw", "t")
+  }
+
   test("ndjson socket ingest: parse, malformed drop, signup filter") {
     val server = new ServerSocket(0)
     val port = server.getLocalPort
@@ -183,7 +193,7 @@ class ApiSpec extends AnyFunSuite {
     feeder.setDaemon(true)
     feeder.start()
 
-    val df = graft.streaming.NdjsonIngest.fromSocket(spark, "localhost", port)
+    val df = fromSocket("localhost", port)
     val q = df.writeStream.format("memory").queryName("ndjson_test")
       .outputMode("append").start()
     try {

@@ -4,6 +4,8 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,6 +33,19 @@ class HttpSourceSpec extends AnyFunSuite {
     lines.foreach { l => os.write((l + "\n").getBytes(StandardCharsets.UTF_8)); os.flush() }
     os.close() // server drops the stream; client must reconnect
   }
+
+  /** Writes lines "0", "1", … "n-1" as fast as the reader takes them. */
+  private def flood(ex: HttpExchange, n: Int): Unit = {
+    ex.sendResponseHeaders(200, 0)
+    val os = new java.io.BufferedOutputStream(ex.getResponseBody, 1 << 16)
+    try {
+      (0 until n).foreach(i => os.write(s"$i\n".getBytes(StandardCharsets.UTF_8)))
+      os.close()
+    } catch { case _: java.io.IOException => () } // a stopped reader hung up
+  }
+
+  private def metric(s: sources.HttpNdjsonMicroBatchStream, key: String): Long =
+    s.metrics(java.util.Optional.empty()).get(key).toLong
 
   private def collectUntil(queryName: String, n: Int,
       q: org.apache.spark.sql.streaming.StreamingQuery): Array[Row] = {
@@ -109,7 +124,7 @@ class HttpSourceSpec extends AnyFunSuite {
     // No live server needed: the restart path is pure offset bookkeeping.
     val s = new sources.HttpNdjsonMicroBatchStream("http://localhost:1/none",
       sse = false, reconnectDelayMs = 60000, readTimeoutMs = 0,
-      numPartitions = 2, maxLinesPerTrigger = Long.MaxValue)
+      maxLinesPerTrigger = Long.MaxValue)
     try {
       // offset-log restore: committed batch ended at 3, uncommitted at 5 —
       // deserializeOffset rebases the fresh (empty) buffer to the max (5)
@@ -142,7 +157,7 @@ class HttpSourceSpec extends AnyFunSuite {
     def values(ps: Array[org.apache.spark.sql.connector.read.InputPartition]) =
       ps.flatMap(_.asInstanceOf[sources.HttpLinesPartition].rows).toSeq
     val a = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
-      reconnectDelayMs = 100, readTimeoutMs = 0, numPartitions = 2,
+      reconnectDelayMs = 100, readTimeoutMs = 0,
       maxLinesPerTrigger = Long.MaxValue, replayDir = Some(replay))
     var batch2 = Seq.empty[(String, Long)]
     try {
@@ -169,8 +184,7 @@ class HttpSourceSpec extends AnyFunSuite {
     // "fresh process": new instance, same journal, feed unreachable
     val b = new sources.HttpNdjsonMicroBatchStream("http://localhost:1/none",
       sse = false, reconnectDelayMs = 60000, readTimeoutMs = 0,
-      numPartitions = 2, maxLinesPerTrigger = Long.MaxValue,
-      replayDir = Some(replay))
+      maxLinesPerTrigger = Long.MaxValue, replayDir = Some(replay))
     try {
       b.deserializeOffset("3")
       b.deserializeOffset("5")
@@ -268,13 +282,39 @@ class HttpSourceSpec extends AnyFunSuite {
     }
     val q = spark.readStream.format("http-ndjson")
       .option("url", url).option("mode", "sse").option("reconnectDelayMs", 100)
-      .option("silenceRestartMs", 400).option("silenceCheckMs", 100).load()
+      .option("silenceRestartMs", 400).load()
       .writeStream.format("memory").queryName("http_silent").outputMode("append").start()
     try {
       val rows = collectUntil("http_silent", 2, q)
       assert(rows.map(_.getAs[String]("value")).toSet == Set("one", "two"),
         "supervisor must restart the silent-but-alive connection and pick up the fresh stream")
     } finally { q.stop(); server.stop(0) }
+  }
+
+  test("event-silence supervisor: a feed that sends no bytes at all is restarted") {
+    // the watchdog's disconnect() waits for a read blocked on a byte-silent
+    // feed, so the read timeout (silenceRestartMs unless set) ends that read
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val (server, url) = serve("/mute") { (hit, ex) =>
+      if (hit == 1) {
+        ex.sendResponseHeaders(200, 0)
+        val os = ex.getResponseBody
+        os.write("{\"a\":1}\n".getBytes(StandardCharsets.UTF_8)); os.flush()
+        release.await(60, java.util.concurrent.TimeUnit.SECONDS) // open, no bytes
+        try os.close() catch { case _: java.io.IOException => () }
+      } else chunked(ex, if (hit == 2) Seq("{\"a\":2}") else Nil)
+    }
+    val q = spark.readStream.format("http-ndjson")
+      .option("url", url).option("reconnectDelayMs", 100)
+      .option("silenceRestartMs", 400).load()
+      .writeStream.format("memory").queryName("http_mute").outputMode("append").start()
+    try {
+      val t0 = System.currentTimeMillis()
+      val rows = collectUntil("http_mute", 2, q)
+      val ms = System.currentTimeMillis() - t0
+      assert(rows.map(_.getAs[String]("value")).toSet == Set("{\"a\":1}", "{\"a\":2}"))
+      assert(ms < 10000, s"the mute connection was restarted only after $ms ms")
+    } finally { release.countDown(); q.stop(); server.stop(0) }
   }
 
   test("stop() returns at once on an open but silent feed, and no later line is buffered") {
@@ -291,7 +331,7 @@ class HttpSourceSpec extends AnyFunSuite {
       } else chunked(ex, Nil)
     }
     val s = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
-      reconnectDelayMs = 100, readTimeoutMs = 0, numPartitions = 1,
+      reconnectDelayMs = 100, readTimeoutMs = 0,
       maxLinesPerTrigger = Long.MaxValue)
     try {
       val deadline = System.currentTimeMillis() + 10000
@@ -349,6 +389,142 @@ class HttpSourceSpec extends AnyFunSuite {
     try {
       val rows = collectUntil("http_signups", 2, q)
       assert(rows.map(_.getAs[String]("username")).toSet == Set("alice", "carol"))
+    } finally { q.stop(); server.stop(0) }
+  }
+
+  test("a feed that outruns the engine: the buffer stays at its cap, every line once and in order") {
+    val cap = sources.HttpNdjson.BufferCap
+    val total = 10 * cap
+    val (server, url) = serve("/flood") { (hit, ex) =>
+      if (hit == 1) flood(ex, total) else chunked(ex, Nil)
+    }
+    // the watchdog checks every 50 ms; the consumer below leaves the reader
+    // waiting on a full buffer for longer than this after each batch
+    val s = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
+      reconnectDelayMs = 100, readTimeoutMs = 0, maxLinesPerTrigger = Long.MaxValue,
+      silenceRestartMs = 300)
+    try {
+      var (start, next, outOfOrder, maxBuffered) = (0L, 0L, 0L, 0L)
+      val deadline = System.currentTimeMillis() + 60000
+      while (next < total && System.currentTimeMillis() < deadline) {
+        maxBuffered = math.max(maxBuffered, metric(s, "bufferedLines"))
+        val end = s.latestOffset(sources.HttpLineOffset(start), s.getDefaultReadLimit)
+          .asInstanceOf[sources.HttpLineOffset].n
+        if (end == start) Thread.sleep(20)
+        else {
+          assert(end - start <= cap / 2, s"batch [$start,$end) is over the read limit")
+          s.planInputPartitions(sources.HttpLineOffset(start), sources.HttpLineOffset(end))
+            .flatMap(_.asInstanceOf[sources.HttpLinesPartition].rows).foreach { r =>
+              if (r._1 != next.toString) outOfOrder += 1
+              next += 1
+            }
+          // as Spark does: the previous batch commits once this one is planned
+          s.commit(sources.HttpLineOffset(start))
+          start = end
+          Thread.sleep(400)
+        }
+      }
+      assert(next == total && outOfOrder == 0,
+        s"$next of $total lines arrived, $outOfOrder out of place")
+      assert(maxBuffered == cap, s"the buffer peaked at $maxBuffered lines, cap $cap")
+      assert(metric(s, "silenceRestarts") == 0,
+        "time spent waiting on a full buffer is not event silence")
+    } finally { s.stop(); server.stop(0) }
+  }
+
+  test("stop() returns at once while the reader waits on a full buffer") {
+    val cap = sources.HttpNdjson.BufferCap
+    val (server, url) = serve("/full") { (hit, ex) =>
+      if (hit == 1) flood(ex, 2 * cap) else chunked(ex, Nil)
+    }
+    val s = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
+      reconnectDelayMs = 100, readTimeoutMs = 0, maxLinesPerTrigger = Long.MaxValue)
+    try {
+      val deadline = System.currentTimeMillis() + 30000
+      while (metric(s, "bufferedLines") < cap && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(metric(s, "bufferedLines") == cap, "the flood must fill the buffer")
+      Thread.sleep(200) // the reader now waits in offer with the next line
+      val t0 = System.nanoTime()
+      s.stop()
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 1000, s"stop() took $ms ms with the reader waiting on a full buffer")
+      def reader = Thread.getAllStackTraces.keySet.asScala
+        .exists(t => t.getName == s"http-ndjson-$url" && t.isAlive)
+      val gone = System.currentTimeMillis() + 5000
+      while (reader && System.currentTimeMillis() < gone) Thread.sleep(20)
+      assert(!reader, "the stopped reader must leave its wait and exit")
+      assert(metric(s, "bufferedLines") == cap, "no line after stop")
+    } finally server.stop(0)
+  }
+
+  test("admission control: a second instance replays the first's uncommitted window from the journal") {
+    val cap = sources.HttpNdjson.BufferCap
+    val (server, url) = serve("/replay") { (hit, ex) =>
+      if (hit == 1) flood(ex, 2 * cap) else chunked(ex, Nil)
+    }
+    val replay = java.nio.file.Files.createTempDirectory("http_admit")
+      .toString + "/graft-replay"
+    def rows(s: sources.HttpNdjsonMicroBatchStream, a: Long, b: Long) =
+      s.planInputPartitions(sources.HttpLineOffset(a), sources.HttpLineOffset(b))
+        .flatMap(_.asInstanceOf[sources.HttpLinesPartition].rows).toSeq
+    def next(s: sources.HttpNdjsonMicroBatchStream, from: Long) =
+      s.latestOffset(sources.HttpLineOffset(from), s.getDefaultReadLimit)
+        .asInstanceOf[sources.HttpLineOffset].n
+    val a = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
+      reconnectDelayMs = 100, readTimeoutMs = 0, maxLinesPerTrigger = 1000,
+      replayDir = Some(replay))
+    var batch2 = Seq.empty[(String, Long)]
+    try {
+      val deadline = System.currentTimeMillis() + 30000
+      while (metric(a, "bufferedLines") < cap && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(next(a, 0) == 1000 && next(a, 1000) == 2000, "1000 lines per trigger")
+      assert(rows(a, 0, 1000).map(_._1) == (0 until 1000).map(_.toString))
+      batch2 = rows(a, 1000, 2000)
+      a.commit(sources.HttpLineOffset(1000))
+    } finally { a.stop(); server.stop(0) } // dies with a full buffer and [1000,2000) open
+
+    val b = new sources.HttpNdjsonMicroBatchStream("http://localhost:1/none",
+      sse = false, reconnectDelayMs = 60000, readTimeoutMs = 0,
+      maxLinesPerTrigger = 1000, replayDir = Some(replay))
+    try {
+      b.deserializeOffset("1000")
+      b.deserializeOffset("2000")
+      assert(rows(b, 1000, 2000) == batch2, "the uncommitted window replays byte-identical")
+      assert(batch2.map(_._1) == (1000 until 2000).map(_.toString))
+      assert(next(b, 2000) == 2000, "nothing new is buffered after the restart")
+    } finally b.stop()
+  }
+
+  test("progress events carry the source metrics and the buffered end") {
+    val lines = (1 to 3).map(i => s"""{"m":$i}""")
+    val (server, url) = serve("/metrics") { (hit, ex) =>
+      if (hit == 1) chunked(ex, lines) else chunked(ex, Nil)
+    }
+    val q = spark.readStream.format("http-ndjson")
+      .option("url", url).option("reconnectDelayMs", 100).load()
+      .writeStream.format("memory").queryName("http_metrics").outputMode("append").start()
+    try {
+      assert(collectUntil("http_metrics", 3, q).length == 3)
+      val src = q.lastProgress.sources(0)
+      assert(src.metrics.keySet.asScala ==
+        Set("bufferedLines", "connects", "silenceRestarts", "consecutiveFailures"))
+      assert(src.metrics.get("connects").toInt >= 1 && src.metrics.get("silenceRestarts") == "0")
+      assert(src.latestOffset == "3" && src.endOffset == "3", src.json)
+    } finally { q.stop(); server.stop(0) }
+  }
+
+  test("NdjsonIngest.fromHttp runs the event-silence supervisor with default options") {
+    val (server, url) = serve("/supervised") { (_, ex) => chunked(ex, Nil) }
+    val q = graft.streaming.NdjsonIngest.fromHttp(spark, url)
+      .writeStream.format("memory").queryName("http_supervised").outputMode("append").start()
+    def watchdog = Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == s"http-ndjson-watchdog-$url" && t.isAlive)
+    try {
+      val deadline = System.currentTimeMillis() + 30000
+      while (!watchdog && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(watchdog, "the live feed must run with its silence watchdog")
     } finally { q.stop(); server.stop(0) }
   }
 }

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Restart-safety: checkpointed streaming jobs resume without loss or
@@ -23,6 +24,33 @@ class RecoverySpec extends AnyFunSuite {
     ev.filter(col("event_id") % 2 === 0).coalesce(1).write.mode("append").parquet(dir)
     ev.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("append").parquet(dir)
     dir
+  }
+
+  /** A restart-safe dispatch sink: each batch acts on the rows not yet in
+    * the dispatch log, then logs them. */
+  private def dispatch(matched: DataFrame, logDir: String, ckpt: String)(
+      act: DataFrame => Unit): StreamingQuery =
+    matched.writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val fresh = graft.streaming.ActionSink.undispatched(spark, batch, logDir)
+          .persist() // evaluated twice: act + log append
+        try {
+          act(fresh)
+          fresh.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(logDir)
+        } finally fresh.unpersist()
+        ()
+      }
+      .start()
+
+  /** The delayed sink GraftApp runs: one `DelayedDispatcher` per query. */
+  private def dispatchDelayed(matched: DataFrame, pendingDir: String, logDir: String,
+      ckpt: String)(act: DataFrame => Unit): StreamingQuery = {
+    val dispatcher = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+    matched.writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        dispatcher.dispatch(batch, batchId)(act)
+      }
+      .start()
   }
 
   test("grouped counts survive a stop/restart on the same checkpoint") {
@@ -192,8 +220,7 @@ class RecoverySpec extends AnyFunSuite {
           graft.streaming.ActionSink.actionDelayUs(col("event_id"), col("action"), col("no_delay")))
     }
     def run(ckpt: String): Unit = {
-      val q = graft.streaming.ActionSink.dispatchDelayed(
-        spark, matchedStream(), pendingDir, logDir, ckpt)(_ => ())
+      val q = dispatchDelayed(matchedStream(), pendingDir, logDir, ckpt)(_ => ())
       try q.processAllAvailable() finally q.stop()
     }
     // file 1: a delayed close at t=0 (deadline in [31.5, 101.5) s) and an
@@ -300,7 +327,7 @@ class RecoverySpec extends AnyFunSuite {
     val matched = spark.readStream.schema(schema).parquet(srcDir)
       .filter(col("event_type") === "signup")
       .select(col("event_id"), lit("r_stream").as("rule_name"))
-    val q = graft.streaming.ActionSink.dispatch(spark, matched, logDir, ckpt)(_ => ())
+    val q = dispatch(matched, logDir, ckpt)(_ => ())
     try q.processAllAvailable() finally q.stop()
     val logged = spark.read.parquet(logDir)
     val expected = Tables(spark, sf).events.filter(col("event_type") === "signup").count()

@@ -1,5 +1,7 @@
 package graft
 
+import java.time.Clock
+import java.util.Locale
 import java.util.concurrent.atomic.AtomicBoolean
 import javax.annotation.concurrent.GuardedBy
 
@@ -9,10 +11,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.commands.CommandParser
-import graft.rules.{RuleEngine, Rules, RuleStore}
+import graft.rules.{RuleEngine, RuleStore}
 import graft.streaming.{ActionSink, DelayedDispatcher, NdjsonIngest}
 import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
 
@@ -23,13 +25,14 @@ import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
   *     signup stream ([[NdjsonIngest.fromHttp]]), silence-supervised by the
   *     source itself (status.rs:36-45's 90 s watchdog, the source's
   *     default `silenceRestartMs`).
-  *   - `eventhandler::handle_events` → a foreachBatch loop that logs the
-  *     batch for `seen`, matches it via the broadcast rule join against the
-  *     in-memory rule snapshot (the reference's rule vector; rebuilt from the
-  *     rules file only after a mutation), and hands the matches to one
-  *     [[DelayedDispatcher]] per start: due-now actions fire in the same
-  *     batch, the randomized 30–100 s holds wait in the pending log
-  *     (effectively-once either way).
+  *   - `eventhandler::handle_events` → a foreachBatch loop
+  *     ([[handleEvents]]) that matches each batch via the broadcast rule
+  *     join against the in-memory rule snapshot (the reference's rule
+  *     vector; rebuilt from the rules file only after a mutation) in one
+  *     collect, hands the matches to one [[DelayedDispatcher]] per start
+  *     (due-now actions fire in the same batch, the randomized 30–100 s holds
+  *     wait in the pending log; effectively-once either way), and then adds
+  *     the batch's signups to the app's [[SeenRing]] for `seen`.
   *   - `zulip::rtm::connect_to_zulip` + `status::status_loop` → [[ZulipRtm]]
   *     under [[ZulipSupervisor]] (300 s ping watchdog), commands dispatched
   *     by [[commandDispatcher]] against the same rule snapshot and file.
@@ -127,16 +130,45 @@ object GraftApp {
     notices
   }
 
-  /** The one column of the event log `seen` reads. Schema-less reads of
-    * parquet sample a footer, which costs a job. */
-  private val seenSchema = StructType(Seq(StructField("username", StringType)))
+  /** The reference's `seen` memory (eventhandler.rs:90-116, 395-416): the
+    * usernames of the last [[SeenRing.Capacity]] signups, with an occurrence
+    * count per username that ignores case. It lives in memory only, so a
+    * restart forgets it, as the reference's does. The batch thread adds and
+    * the Zulip thread reads, so both hold the ring's lock. */
+  final class SeenRing {
+    @GuardedBy("this") private val ring = mutable.ArrayDeque.empty[String]
+    @GuardedBy("this") private val counts = mutable.HashMap.empty[String, Int]
+
+    private def fold(username: String): String = username.toLowerCase(Locale.ROOT)
+
+    def add(usernames: Iterable[String]): Unit = synchronized {
+      usernames.foreach { u =>
+        val k = fold(u)
+        ring.append(k)
+        counts(k) = counts.getOrElse(k, 0) + 1
+        if (ring.size > SeenRing.Capacity) {
+          val old = ring.removeHead()
+          if (counts(old) == 1) counts.remove(old) else counts(old) -= 1
+        }
+      }
+    }
+
+    def count(username: String): Int = synchronized(counts.getOrElse(fold(username), 0))
+  }
+
+  object SeenRing {
+    val Capacity = 10000
+  }
+
+  private def micros(clock: Clock): Long = clock.millis() * 1000L
 
   /** Zulip command dispatch against the rule snapshot the event pipeline
     * matches with; a mutation saves the file and drops the snapshot, so its
     * effect reaches the very next batch (the reference's in-memory handoff,
-    * made durable). */
-  def commandDispatcher(spark: SparkSession, rulesPath: String,
-      eventLogDir: String): CommandParser.Parsed => Option[String] = {
+    * made durable). `seen` answers from `seen` without running a job;
+    * `add`, `renew` and `namechk` read the time from `clock`. */
+  def commandDispatcher(spark: SparkSession, rulesPath: String, seen: SeenRing,
+      clock: Clock): CommandParser.Parsed => Option[String] = {
     // `rules test` criteria may call is_in_ip_range (lua.rs:85-100)
     graft.plans.GraftExtensions.install(spark)
     p => {
@@ -159,10 +191,10 @@ object GraftApp {
         case "disable_re" => saveAnd(RuleStore.setEnabled(_, p.name.get, enabled = false),
           "Rules disabled.")
         case "renew" =>
-          val newExp = Rules.nowUs + p.expiryDays.get.toLong * 86400L * 1000000L
+          val newExp = micros(clock) + p.expiryDays.get.toLong * 86400L * 1000000L
           saveAnd(RuleStore.renew(_, p.name.get, newExp), s"Rule ${p.name.get} renewed.")
         case "add" =>
-          CommandParser.toRuleRow(p, Rules.nowUs) match {
+          CommandParser.toRuleRow(p, micros(clock)) match {
             case Some(row) =>
               try saveAnd(RuleStore.add(_, row, spark), s"Rule ${row.name} added.")
               catch { case e: IllegalArgumentException => Some(e.getMessage) }
@@ -183,26 +215,55 @@ object GraftApp {
             } catch { case e: Exception => s"error: ${e.getMessage}" }
           Some(s"Result: $verdict")
         case "namechk" =>
-          val hits = RuleEngine.namechk(spark, p.name.get, store).collect()
+          val hits = RuleEngine.namechk(spark, p.name.get, store, micros(clock)).collect()
           Some(if (hits.isEmpty) "No rule matches that username."
           else hits.map(r => s"${r.getString(0)} -> ${r.getString(1)}").mkString("; "))
         case "seen" =>
-          val path = new org.apache.hadoop.fs.Path(eventLogDir)
-          val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-          if (!fs.exists(path)) Some("Username not seen recently")
-          else {
-            val n = spark.read.schema(seenSchema).parquet(eventLogDir)
-              .filter(col("username") === p.name.get).count()
-            Some(if (n > 0) s"Seen: ${p.name.get} ($n events)" else "Username not seen recently")
-          }
+          val n = seen.count(p.name.get)
+          Some(if (n > 0) s"Seen: ${p.name.get} ($n events)" else "Username not seen recently")
         case _ => Some("Could not parse user command")
       }
     }
   }
 
+  /** `eventhandler::handle_events` as a `foreachBatch` body. One collect
+    * matches the batch against the rule snapshot at `clock`'s time and
+    * returns every signup, with its matches if it has any (a collect of the
+    * local rows built from it runs no job). The matches go to one
+    * [[DelayedDispatcher]] on `workDir`'s logs, which hands each action's
+    * notice to `post`; then each signup goes into `seen` once, however many
+    * rules it matched. Adding to `seen` last keeps a `seen` reply from
+    * running ahead of the batch. */
+  private[graft] def handleEvents(spark: SparkSession, rulesPath: String, workDir: String,
+      clock: Clock, seen: SeenRing)(post: String => Unit): (DataFrame, Long) => Unit = {
+    val dispatcher = new DelayedDispatcher(spark, s"$workDir/pending", s"$workDir/dispatched")
+    (batch, batchId) => {
+      val joined = batch.withColumn("signup", monotonically_increasing_id())
+        .join(broadcast(rules(spark, rulesPath)),
+          RuleEngine.gate(micros(clock)) && RuleEngine.criterion, "left_outer")
+        .select(col("event_id"), col("name").as("rule_name"), col("username"),
+          col("actions"), col("no_delay"), col("ts_us"), col("signup"))
+        .withColumn("due_us", col("ts_us") + ActionSink.actionDelayUs(
+          col("event_id"), col("actions"), col("no_delay")))
+      val rows = joined.collect()
+      val matched = rows.filter(_.getAs[String]("rule_name") != null)
+      dispatcher.dispatch(
+        spark.createDataFrame(matched.toSeq.asJava, joined.schema).drop("signup"), batchId) {
+        fresh =>
+          fresh.collect().foreach { r =>
+            post(s"action ${r.getAs[String]("actions")} on ${r.getAs[String]("username")} " +
+              s"(rule ${r.getAs[String]("rule_name")})")
+          }
+      }
+      seen.add(rows.distinctBy(_.getAs[Long]("signup")).map(_.getAs[String]("username")))
+    }
+  }
+
   /** Start the whole program. `feedUrl` is the NDJSON signup feed (the
     * reference's event stream); rules live at `rulesPath`; actions land in
-    * `logDir` with the pending hold in `pendingDir`. */
+    * `workDir/dispatched` with the pending hold in `workDir/pending`.
+    * `clock` stamps rule additions, renewals, the expiry sweep and the
+    * match gate. */
   def start(
       spark: SparkSession,
       conf: ZulipConf,
@@ -211,16 +272,11 @@ object GraftApp {
       zulipBaseUrlOverride: Option[String] = None,
       sweepMs: Long = 15000L,
       zulipCheckMs: Long = 1000L,
-      zulipSilenceRestartMs: Long = 300000L): Handles = {
+      zulipSilenceRestartMs: Long = 300000L,
+      clock: Clock = Clock.systemUTC()): Handles = {
     val rulesPath = conf.rulesPath
-    val pendingDir = s"$workDir/pending"
-    val logDir = s"$workDir/dispatched"
-    val eventLogDir = s"$workDir/events"
     val stop = new AtomicBoolean(false)
     val client = new ZulipClient(conf, zulipBaseUrlOverride)
-
-    // eventhandler.handle_events: per micro-batch, log events, match against
-    // the rule snapshot, stamp deadlines, dispatch effectively-once
     val signups = NdjsonIngest.fromHttp(spark, feedUrl)
       .withColumn("event_id",
         graft.functions.Portable.hash64(concat_ws("|", col("username"),
@@ -228,34 +284,16 @@ object GraftApp {
       .withColumn("ts_us", unix_micros(current_timestamp()))
     // a new app reads the store as it is on disk now
     rulesLock.synchronized(snapshots.remove(rulesPath))
-    val dispatcher = new DelayedDispatcher(spark, pendingDir, logDir)
+    val seen = new SeenRing
     val events = signups.writeStream
       .option("checkpointLocation", s"$workDir/checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          b.write.mode("append").parquet(eventLogDir) // the `seen` memory
-          val matched = RuleEngine.matches(b, rules(spark, rulesPath))
-            .select(col("event_id"), col("name").as("rule_name"),
-              col("username"), col("actions"), col("no_delay"), col("ts_us"))
-            .withColumn("due_us", col("ts_us") + ActionSink.actionDelayUs(
-              col("event_id"), col("actions"), col("no_delay")))
-          dispatcher.dispatch(matched, batchId) { fresh =>
-            fresh.collect().foreach { r =>
-              client.postMessage(
-                s"action ${r.getAs[String]("actions")} on ${r.getAs[String]("username")} " +
-                  s"(rule ${r.getAs[String]("rule_name")})",
-                conf.zulipNotifyStream, conf.zulipNotifyTopic)
-            }
-          }
-        } finally b.unpersist()
-        ()
-      }
+      .foreachBatch(handleEvents(spark, rulesPath, workDir, clock, seen)(
+        client.postMessage(_, conf.zulipNotifyStream, conf.zulipNotifyTopic)))
       .start()
 
     // zulip rtm + status_loop: supervised command connection
     val supervisor = new ZulipSupervisor(conf, client,
-      ZulipRtm.parseOrError(commandDispatcher(spark, rulesPath, eventLogDir)),
+      ZulipRtm.parseOrError(commandDispatcher(spark, rulesPath, seen, clock)),
       silenceRestartMs = zulipSilenceRestartMs, checkMs = zulipCheckMs)
     val zulipThread = supervisor.start(stop)
 
@@ -273,7 +311,7 @@ object GraftApp {
         }
         if (!stop.get()) {
           try {
-            sweepRules(spark, rulesPath, Rules.nowUs).foreach { case (name, notice) =>
+            sweepRules(spark, rulesPath, micros(clock)).foreach { case (name, notice) =>
               client.postMessage(s"Rule $name: $notice",
                 conf.zulipNotifyStream, conf.zulipNotifyTopic)
             }

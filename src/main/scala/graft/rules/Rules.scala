@@ -31,7 +31,8 @@ final case class RuleRow(
 
 object Rules {
 
-  /** Fixed evaluation instant (the reference's `Utc::now()`): 2024-06-01T00:00Z. */
+  /** Fixed evaluation instant (the reference's `Utc::now()`): 2024-06-01T00:00Z.
+    * The catalogue and its oracle use it; the live bot reads its clock. */
   val nowUs: Long = Instant.parse("2024-06-01T00:00:00Z").toEpochMilli * 1000L
 
   def us(iso: String): Long = Instant.parse(iso).toEpochMilli * 1000L

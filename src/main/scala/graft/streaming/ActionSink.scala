@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -14,9 +15,11 @@ import org.apache.spark.sql.types.StructType
   * Structured Streaming's `foreachBatch` is at-least-once across restarts:
   * a batch that dispatched but crashed before the commit re-runs. The
   * dispatcher makes the side effect idempotent the standard way — an
-  * append-only dispatch log keyed by (event_id, rule_name); each batch
-  * anti-joins the log ([[undispatched]]) before acting, so replays of
-  * LOGGED rows are no-ops. The remaining window is a crash BETWEEN `act`
+  * append-only dispatch log keyed by (event_id, rule_name). A replayed or
+  * read-back batch is anti-joined against the log ([[undispatched]]); a
+  * steady batch is checked against the dispatcher's cache of the keys it
+  * logged within [[MaxHoldUs]] of its clock. Either way replays of LOGGED
+  * rows are no-ops. The remaining window is a crash BETWEEN `act`
   * and the log append: that batch's fresh rows re-dispatch once on restart
   * (dispatch-then-log keeps at-least-once — the reference's mod-API calls
   * are idempotent bans/marks, where a duplicate POST is harmless and a LOST
@@ -43,6 +46,10 @@ object ActionSink {
       .otherwise(
         (lit(30L) + pmod(xxhash64(eventId), lit(70L))) * lit(1000000L) +
           when(action === "close", lit(1500000L)).otherwise(lit(0L)))
+
+  /** The longest hold [[actionDelayUs]] gives: (30 + 69) s, +1.5 s for
+    * `close`. It bounds how long a [[DelayedDispatcher]] remembers a key. */
+  val MaxHoldUs: Long = (30L + 69L) * 1000000L + 1500000L
 
   /** Rows of `batch` not yet in the dispatch log (dedup within the batch,
     * then anti-join against the log). Only a genuinely ABSENT log means
@@ -71,12 +78,24 @@ object ActionSink {
   * Like the reference, an action with an unreached deadline survives a
   * crash: it is held in the pending log, not lost with the process. A tail
   * event whose deadline no later event ever passes dispatches on the next
-  * batch after one arrives. Every acted-on row goes through
-  * [[ActionSink.undispatched]], and `act` runs before the log append.
+  * batch after one arrives. `act` runs before the log append.
   *
-  * The clock and the earliest pending deadline are a cache of the logs: on
-  * its first batch a dispatcher seeds both from the pending rows not yet in
-  * the dispatch log, so a restart (or a fresh query on the same
+  * Dedup has two paths. A steady batch dedups its due rows in memory,
+  * within the batch and then against the keys this dispatcher logged whose
+  * `ts_us` is at most [[ActionSink.MaxHoldUs]] behind the clock; it runs no
+  * job for this. So an identical signup (same `event_id`) that comes back
+  * after that horizon is acted on again, as the reference's in-memory
+  * bookkeeping does. Two kinds of batch anti-join the whole dispatch log
+  * instead ([[ActionSink.undispatched]]): a dispatcher's first batch with
+  * matches or held rows, when the dispatch log exists, since it may be a
+  * restart's replay stamped with fresh, arbitrarily later `ts_us`; and any
+  * batch that reads the pending log back, which returns every held row that
+  * ever came due, long-fired ones included.
+  *
+  * The clock, the earliest pending deadline and the recent keys are a cache
+  * of the logs: on its first batch a dispatcher seeds the first two from the
+  * pending rows not yet in the dispatch log and the keys from the dispatch
+  * log's recent rows, so a restart (or a fresh query on the same
   * directories) neither fires a held row early nor loses one. Not
   * thread-safe: a query calls [[dispatch]] from one thread, and a failed
   * call fails its query, so a dispatcher never outlives a failed batch. */
@@ -84,14 +103,25 @@ final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: S
   private var seeded = false
   private var clockUs = Long.MinValue // max ts_us matched so far
   private var nextDueUs = Long.MaxValue // earliest deadline held in pending/
+  /** (event_id, rule_name) → `ts_us` of the logged keys within the horizon,
+    * seeded from the dispatch log by the first batch that has a clock */
+  private val logged = mutable.HashMap.empty[(Long, String), Long]
+  private var keysSeeded = false
+
+  private def exists(dir: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)
+  }
 
   def dispatch(batch: DataFrame, batchId: Long)(act: DataFrame => Unit): Unit = {
     val schema = batch.schema
     def local(rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, schema)
     def pending = spark.read.schema(schema).parquet(pendingDir)
+    val (idIdx, ruleIdx) = (schema.fieldIndex("event_id"), schema.fieldIndex("rule_name"))
+    val (tsIdx, dueIdx) = (schema.fieldIndex("ts_us"), schema.fieldIndex("due_us"))
+    def key(r: Row) = (r.getLong(idIdx), r.getString(ruleIdx))
     if (!seeded) {
-      val path = new org.apache.hadoop.fs.Path(pendingDir)
-      if (path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)) {
+      if (exists(pendingDir)) {
         val held = ActionSink.undispatched(spark, pending, logDir)
           .agg(max(col("ts_us")), min(col("due_us"))).head()
         if (!held.isNullAt(0)) { clockUs = held.getLong(0); nextDueUs = held.getLong(1) }
@@ -100,8 +130,17 @@ final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: S
     }
     // one collect of the matches: the source's trigger window bounds them
     val rows = batch.collect().toSeq
-    val (tsIdx, dueIdx) = (schema.fieldIndex("ts_us"), schema.fieldIndex("due_us"))
     rows.foreach(r => clockUs = math.max(clockUs, r.getLong(tsIdx)))
+    if (clockUs == Long.MinValue) return // nothing matched or held yet
+    val horizonUs = clockUs - ActionSink.MaxHoldUs
+    // a first batch may be a replay of logged rows; with no log it is not
+    val replayable = !keysSeeded && exists(logDir)
+    if (replayable)
+      spark.read.schema(StructType(Seq("event_id", "rule_name", "ts_us").map(schema(_))))
+        .parquet(logDir).filter(col("ts_us") >= horizonUs).collect()
+        .foreach(r => logged((r.getLong(0), r.getString(1))) = r.getLong(2))
+    keysSeeded = true
+    logged.filterInPlace((_, ts) => ts >= horizonUs)
     val (dueNow, later) = rows.partition(_.getLong(dueIdx) <= clockUs)
     if (later.nonEmpty) {
       local(later).coalesce(1).write.mode("append").parquet(pendingDir)
@@ -109,21 +148,23 @@ final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: S
     }
     val heldDue = nextDueUs <= clockUs
     if (dueNow.isEmpty && !heldDue) return
-    val due =
-      if (!heldDue) local(dueNow)
-      else {
+    val fresh =
+      if (heldDue) {
         // a held deadline has passed: read the held rows back, and find the
         // next deadline among those still waiting
         val clock = clockUs
         val next = pending.filter(col("due_us") > clock).agg(min(col("due_us"))).head()
         nextDueUs = if (next.isNullAt(0)) Long.MaxValue else next.getLong(0)
-        local(dueNow).unionByName(pending.filter(col("due_us") <= clock))
-      }
-    val fresh = ActionSink.undispatched(spark, due, logDir).collect().toSeq
+        ActionSink.undispatched(spark,
+          local(dueNow).unionByName(pending.filter(col("due_us") <= clock)), logDir)
+          .collect().toSeq
+      } else if (replayable) ActionSink.undispatched(spark, local(dueNow), logDir).collect().toSeq
+      else dueNow.distinctBy(key).filterNot(r => logged.contains(key(r)))
     if (fresh.nonEmpty) {
       act(local(fresh))
       local(fresh).coalesce(1).withColumn("batch_id", lit(batchId))
         .write.mode("append").parquet(logDir)
+      fresh.foreach(r => logged(key(r)) = r.getLong(tsIdx))
     }
   }
 }

@@ -2,10 +2,16 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.time.{Clock, Instant, ZoneId, ZoneOffset}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.rules.{RuleEngine, RuleRow, Rules, RuleStore}
@@ -104,7 +110,8 @@ class GraftAppSpec extends AnyFunSuite {
     val handles = GraftApp.start(spark, conf,
       s"http://localhost:${feed.getAddress.getPort}/feed", work,
       zulipBaseUrlOverride = Some(s"http://localhost:$zport"),
-      sweepMs = 500L, zulipCheckMs = 60000L, zulipSilenceRestartMs = 600000L)
+      sweepMs = 500L, zulipCheckMs = 60000L, zulipSilenceRestartMs = 600000L,
+      clock = Clock.fixed(Instant.ofEpochMilli(Rules.nowUs / 1000L), ZoneOffset.UTC))
     try {
       val deadline = System.currentTimeMillis() + 60000
       def all: Seq[String] = posted.toArray(Array.empty[String]).toSeq
@@ -151,7 +158,8 @@ class GraftAppSpec extends AnyFunSuite {
     val fresh = spark.newSession()
     val work = java.nio.file.Files.createTempDirectory("graft_cmd").toString
     val reply = ZulipRtm.parseOrError(
-      GraftApp.commandDispatcher(fresh, s"$work/rules.json", s"$work/events"))
+      GraftApp.commandDispatcher(fresh, s"$work/rules.json", new GraftApp.SeenRing,
+        Clock.systemUTC()))
     assert(reply("signup rules test `is_in_ip_range(ip, '127.0.0.0', '127.255.255.255')`")
       .contains("Result: true"))
   }
@@ -160,22 +168,26 @@ class GraftAppSpec extends AnyFunSuite {
     RuleRow(name, "username_contains", pattern, 0, enabled = true, suspOnly = false,
       noDelay = false, expiryUs, "notify")
 
-  /** The rules a micro-batch would match `username` against right now. */
-  private def matching(rulesPath: String, username: String): Set[String] = {
+  /** Signups as the live stream stamps them, minus the feed. */
+  private def signups(rows: (String, Long)*): DataFrame = {
     import spark.implicits._
-    val signup = Seq((1L, username, "u@x.example", "9.9.9.9", Option.empty[String],
-        Option.empty[String], false, 0L))
-      .toDF("event_id", "username", "email", "ip", "ua", "fingerprint", "susp_ip", "ts_us")
-    RuleEngine.matches(signup, GraftApp.rules(spark, rulesPath))
-      .select("name").collect().map(_.getString(0)).toSet
+    rows.map { case (u, ts) => (u, s"$u@x.example", "9.9.9.9", Option.empty[String],
+        Option.empty[String], false, ts) }
+      .toDF("username", "email", "ip", "ua", "fingerprint", "susp_ip", "ts_us")
+      .withColumn("event_id", xxhash64(col("username")))
   }
+
+  /** The rules a micro-batch would match `username` against right now. */
+  private def matching(rulesPath: String, username: String): Set[String] =
+    RuleEngine.matches(signups(username -> 0L), GraftApp.rules(spark, rulesPath))
+      .select("name").collect().map(_.getString(0)).toSet
 
   test("rule snapshot: a remove command reaches the next batch's match") {
     val work = java.nio.file.Files.createTempDirectory("graft_snap_rm").toString
     val rulesPath = s"$work/rules.json"
     RuleStore.save(Rules.dfFor(spark, Seq(rule("r_mal", "mal"), rule("r_al", "al"))), rulesPath)
     val reply = ZulipRtm.parseOrError(
-      GraftApp.commandDispatcher(spark, rulesPath, s"$work/events"))
+      GraftApp.commandDispatcher(spark, rulesPath, new GraftApp.SeenRing, Clock.systemUTC()))
     assert(matching(rulesPath, "mal1") == Set("r_mal", "r_al"))
     assert(reply("signup rules remove r_mal").contains("Rule r_mal removed."))
     assert(matching(rulesPath, "mal1") == Set("r_al"))
@@ -214,7 +226,74 @@ class GraftAppSpec extends AnyFunSuite {
     assert(matching(rulesPath, "mal1") == Set("r_new"))
   }
 
-  test("job budget: a steady micro-batch with matches and no holds runs at most 8 Spark jobs") {
+  /** One app's batch handler and command replies over `rules`, and the
+    * action notices the handler posts. */
+  private def app(rules: Seq[RuleRow], clock: Clock = Clock.systemUTC()) = {
+    val work = java.nio.file.Files.createTempDirectory("graft_handler").toString
+    val rulesPath = s"$work/rules.json"
+    RuleStore.save(Rules.dfFor(spark, rules), rulesPath)
+    val seen = new GraftApp.SeenRing
+    val posted = mutable.ArrayBuffer.empty[String]
+    val handle = GraftApp.handleEvents(spark, rulesPath, work, clock, seen)(posted += _)
+    (handle, ZulipRtm.parseOrError(GraftApp.commandDispatcher(spark, rulesPath, seen, clock)),
+      posted)
+  }
+
+  test("seen: exact replies after a batch, a lookup that ignores case, a repeat counted twice") {
+    val (handle, reply, _) = app(Seq(rule("r_none", "zzz")))
+    assert(reply("signup seen alice").contains("Username not seen recently"))
+    handle(signups("alice" -> 1L, "bob" -> 1L), 0L)
+    assert(reply("signup seen alice").contains("Seen: alice (1 events)"))
+    assert(reply("signup seen carol").contains("Username not seen recently"))
+    assert(reply("signup seen BOB").contains("Seen: BOB (1 events)"))
+    handle(signups("Alice" -> 2L), 1L)
+    assert(reply("signup seen alice").contains("Seen: alice (2 events)"))
+  }
+
+  test("seen: a signup that matches two rules is counted once") {
+    val (handle, reply, posted) = app(Seq(rule("r_mal", "mal"), rule("r_al", "al")))
+    handle(signups("mal1" -> 1L), 0L)
+    assert(posted.sorted == Seq("action notify on mal1 (rule r_al)",
+      "action notify on mal1 (rule r_mal)"))
+    assert(reply("signup seen mal1").contains("Seen: mal1 (1 events)"))
+  }
+
+  test("seen: the 10 001st signup pushes the oldest one out") {
+    val seen = new GraftApp.SeenRing
+    val cap = GraftApp.SeenRing.Capacity
+    seen.add(Seq("first", "twice") ++ (2 until cap - 1).map(i => s"u$i") ++ Seq("twice"))
+    assert(seen.count("first") == 1 && seen.count("twice") == 2)
+    seen.add(Seq("last"))
+    assert(seen.count("first") == 0 && seen.count("u2") == 1 && seen.count("last") == 1)
+    seen.add(Seq("u"))
+    assert(seen.count("twice") == 1, "the older of two occurrences left the ring")
+  }
+
+  /** A clock that a spec moves by hand. */
+  private final class StepClock(@volatile var now: Instant) extends Clock {
+    def getZone: ZoneId = ZoneOffset.UTC
+    override def withZone(zone: ZoneId): Clock = this
+    def instant(): Instant = now
+  }
+
+  test("real clock: a rule matches before its expiry and stops matching after it") {
+    val clock = new StepClock(Instant.parse("2031-03-01T00:00:00Z"))
+    val (handle, reply, posted) = app(Seq(rule("r_none", "zzz")), clock)
+    // no expiry given: the rule expires 182 days after the clock's now
+    assert(reply("signup rules add r_mal if username contains mal then notify")
+      .contains("Rule r_mal added."))
+    handle(signups("mal1" -> 1L), 0L)
+    assert(posted == Seq("action notify on mal1 (rule r_mal)"))
+    clock.now = clock.now.plusSeconds(181L * 86400L)
+    handle(signups("mal2" -> 2L), 1L)
+    assert(posted.size == 2, "a day before its expiry the rule still matches")
+    clock.now = clock.now.plusSeconds(2L * 86400L)
+    handle(signups("mal3" -> 3L), 2L)
+    assert(posted == Seq("action notify on mal1 (rule r_mal)",
+      "action notify on mal2 (rule r_mal)"), "an expired rule matched")
+  }
+
+  test("job budget: a steady micro-batch with matches and no holds runs at most 3 Spark jobs") {
     val work = java.nio.file.Files.createTempDirectory("graft_jobs").toString
     val rulesPath = s"$work/rules.json"
     RuleStore.save(Rules.dfFor(spark, Seq(rule("r_mal", "mal"))), rulesPath)
@@ -258,16 +337,24 @@ class GraftAppSpec extends AnyFunSuite {
     feed.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
     feed.start()
 
-    // Spark jobs per (query, micro-batch), from the job properties
-    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), AtomicInteger]()
+    // every Spark job as (query, micro-batch, SQL execution), from the job
+    // properties, and every SQL execution's root and physical plan
+    val jobs = new ConcurrentLinkedQueue[(String, Long, Long)]()
+    val execs = new java.util.concurrent.ConcurrentHashMap[Long, (Long, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).foreach { p =>
           val q = p.getProperty("sql.streaming.queryId")
           val b = p.getProperty("streaming.sql.batchId")
-          if (q != null && b != null)
-            jobs.computeIfAbsent((q, b.toLong), _ => new AtomicInteger).incrementAndGet()
+          val x = Option(p.getProperty("spark.sql.execution.id")).fold(-1L)(_.toLong)
+          if (q != null && b != null) jobs.add((q, b.toLong, x))
         }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          execs.put(s.executionId,
+            (s.rootExecutionId.getOrElse(s.executionId), s.physicalPlanDescription))
+        case _ => ()
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     val zport = zulip.getAddress.getPort
@@ -287,10 +374,27 @@ class GraftAppSpec extends AnyFunSuite {
       assert(batches.length == 5, "five steady micro-batches")
       Thread.sleep(500) // the listener bus delivers job starts asynchronously
       val qid = handles.events.id.toString
-      val counts = batches.map(b => b -> Option(jobs.get((qid, b))).fold(0)(_.get)).toMap
-      assert(counts.values.forall(n => n > 0 && n <= 8), s"Spark jobs per batch: $counts")
+      val ours = jobs.asScala.filter(_._1 == qid).toSeq
+      val counts = batches.map(b => b -> ours.count(_._2 == b)).toMap
+      // each of the batch's SQL executions (with those nested under them):
+      // its jobs and the paths its plan reads or writes, else its scans
+      def steps(b: Long): String = {
+        val ids = ours.filter(_._2 == b).map(_._3).toSet
+        val roots = ids.flatMap(id => Option(execs.get(id)).map(_._1))
+        execs.asScala.toSeq.sortBy(_._1)
+          .filter { case (id, (root, _)) => ids(id) || roots(root) }
+          .map { case (id, (root, plan)) =>
+            val paths = "file:[^\\s,\\])]+".r.findAllIn(plan).toSeq.distinct
+            val scans = "\\w*Scan\\w*".r.findAllIn(plan).toSeq.distinct
+            s"exec $id (root $root): ${ours.count(_._3 == id)} jobs, " +
+              (if (paths.nonEmpty) paths.mkString(" ") else scans.mkString(" "))
+          }.mkString(s"batch $b: ", "; ", "")
+      }
+      assert(counts.values.forall(n => n > 0 && n <= 3),
+        s"Spark jobs per batch: $counts\n" + batches.map(steps).mkString("\n"))
       assert(posts.get() > 0, "the matches were dispatched")
       assert(!new java.io.File(s"$work/pending").exists(), "notify actions are never held")
+      assert(!new java.io.File(s"$work/events").exists(), "`seen` keeps no event log")
     } finally {
       feeding = false
       spark.sparkContext.removeSparkListener(listener)

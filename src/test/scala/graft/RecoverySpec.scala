@@ -319,6 +319,47 @@ class RecoverySpec extends AnyFunSuite {
     assert(spark.read.parquet(logDir).count() == 3)
   }
 
+  test("DelayedDispatcher: an identical signup re-fires only once the hold horizon has passed") {
+    import graft.streaming.ActionSink.MaxHoldUs
+    val acted = new Acted
+    val d = new graft.streaming.DelayedDispatcher(spark,
+      tmp("horizon_pend") + "/pending", tmp("horizon_log") + "/log")
+    d.dispatch(matches((1L, "r_a", "notify", 0L)), 0L)(acted(_))
+    d.dispatch(matches((1L, "r_a", "notify", MaxHoldUs)), 1L)(acted(_))
+    assert(acted.ids == Seq(1L), "within the horizon the same key is a duplicate")
+    d.dispatch(matches((1L, "r_a", "notify", MaxHoldUs + 1L)), 2L)(acted(_))
+    assert(acted.ids == Seq(1L, 1L), "past the horizon the same key fires again")
+  }
+
+  test("DelayedDispatcher: a replay stamped 10 min after the logged batch fires nothing") {
+    val pendingDir = tmp("late_pend") + "/pending"
+    val logDir = tmp("late_log") + "/log"
+    val acted = new Acted
+    new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+      .dispatch(matches((1L, "r_a", "notify", 0L), (2L, "r_b", "alt", 0L)), 0L)(acted(_))
+    val replay = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+    val tenMin = 600L * 1000000L
+    replay.dispatch(matches((1L, "r_a", "notify", tenMin), (2L, "r_b", "alt", tenMin)), 0L)(acted(_))
+    replay.dispatch(matches((3L, "r_a", "notify", tenMin + 1L)), 1L)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"the replay fired again: ${acted.ids}")
+  }
+
+  test("DelayedDispatcher: a close fired long ago stays fired when the pending log is read back") {
+    val pendingDir = tmp("old_pend") + "/pending"
+    val logDir = tmp("old_log") + "/log"
+    val acted = new Acted
+    val d = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+    val s = 1000000L
+    d.dispatch(matches((1L, "r_close", "close", 0L)), 0L)(acted(_))
+    d.dispatch(matches((2L, "r_a", "notify", 200L * s)), 1L)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L), "the close came due at 200 s")
+    // much later, a second held close: reading its deadline back also
+    // returns the first close, whose key is long past the horizon
+    d.dispatch(matches((3L, "r_close", "close", 1000L * s)), 2L)(acted(_))
+    d.dispatch(matches((4L, "r_a", "notify", 1200L * s)), 3L)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L, 4L), s"the old close fired again: ${acted.ids}")
+  }
+
   test("ActionSink.dispatch end-to-end over a streaming source") {
     val srcDir = splitEvents()
     val logDir = tmp("dispatch_e2e") + "/log"

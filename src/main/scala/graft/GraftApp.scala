@@ -30,9 +30,11 @@ import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
   *     join against the in-memory rule snapshot (the reference's rule
   *     vector; rebuilt from the rules file only after a mutation) in one
   *     collect, hands the matches to one [[DelayedDispatcher]] per start
-  *     (due-now actions fire in the same batch, the randomized 30–100 s holds
-  *     wait in the pending log; effectively-once either way), and then adds
-  *     the batch's signups to the app's [[SeenRing]] for `seen`.
+  *     (due-now actions fire in the same batch; the randomized 30–100 s holds
+  *     wait in memory, logged to the pending log for restarts, until a
+  *     batch's time passes their deadline; effectively-once either way),
+  *     and then adds the batch's signups to the app's [[SeenRing]] for
+  *     `seen`.
   *   - `zulip::rtm::connect_to_zulip` + `status::status_loop` → [[ZulipRtm]]
   *     under [[ZulipSupervisor]] (300 s ping watchdog), commands dispatched
   *     by [[commandDispatcher]] against the same rule snapshot and file.
@@ -230,10 +232,12 @@ object GraftApp {
     * matches the batch against the rule snapshot at `clock`'s time and
     * returns every signup, with its matches if it has any (a collect of the
     * local rows built from it runs no job). The matches go to one
-    * [[DelayedDispatcher]] on `workDir`'s logs, which hands each action's
-    * notice to `post`; then each signup goes into `seen` once, however many
-    * rules it matched. Adding to `seen` last keeps a `seen` reply from
-    * running ahead of the batch. */
+    * [[DelayedDispatcher]] on `workDir`'s logs, with the largest `ts_us` of
+    * the batch's signups as its clock, so a held action comes due on the
+    * first batch after its deadline whether or not that batch matches
+    * anything. The dispatcher hands each action's notice to `post`; then each
+    * signup goes into `seen` once, however many rules it matched. Adding to
+    * `seen` last keeps a `seen` reply from running ahead of the batch. */
   private[graft] def handleEvents(spark: SparkSession, rulesPath: String, workDir: String,
       clock: Clock, seen: SeenRing)(post: String => Unit): (DataFrame, Long) => Unit = {
     val dispatcher = new DelayedDispatcher(spark, s"$workDir/pending", s"$workDir/dispatched")
@@ -247,13 +251,16 @@ object GraftApp {
           col("event_id"), col("actions"), col("no_delay")))
       val rows = joined.collect()
       val matched = rows.filter(_.getAs[String]("rule_name") != null)
-      dispatcher.dispatch(
-        spark.createDataFrame(matched.toSeq.asJava, joined.schema).drop("signup"), batchId) {
-        fresh =>
+      // the time the batch stamped on its signups, matched or not; a batch
+      // with no signups has no time and cannot bring a hold due
+      rows.map(_.getAs[Long]("ts_us")).maxOption.foreach { nowUs =>
+        dispatcher.dispatch(spark.createDataFrame(matched.toSeq.asJava, joined.schema)
+          .drop("signup"), batchId, nowUs) { fresh =>
           fresh.collect().foreach { r =>
             post(s"action ${r.getAs[String]("actions")} on ${r.getAs[String]("username")} " +
               s"(rule ${r.getAs[String]("rule_name")})")
           }
+        }
       }
       seen.add(rows.distinctBy(_.getAs[Long]("signup")).map(_.getAs[String]("username")))
     }

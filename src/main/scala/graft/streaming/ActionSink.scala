@@ -15,15 +15,16 @@ import org.apache.spark.sql.types.StructType
   * Structured Streaming's `foreachBatch` is at-least-once across restarts:
   * a batch that dispatched but crashed before the commit re-runs. The
   * dispatcher makes the side effect idempotent the standard way — an
-  * append-only dispatch log keyed by (event_id, rule_name). A replayed or
-  * read-back batch is anti-joined against the log ([[undispatched]]); a
-  * steady batch is checked against the dispatcher's cache of the keys it
-  * logged within [[MaxHoldUs]] of its clock. Either way replays of LOGGED
-  * rows are no-ops. The remaining window is a crash BETWEEN `act`
-  * and the log append: that batch's fresh rows re-dispatch once on restart
-  * (dispatch-then-log keeps at-least-once — the reference's mod-API calls
-  * are idempotent bans/marks, where a duplicate POST is harmless and a LOST
-  * one is not; logging first would invert that into at-most-once). The log
+  * append-only dispatch log keyed by (event_id, rule_name). A dispatcher's
+  * first batch, which may be a replay, is anti-joined against the log
+  * ([[undispatched]]); every later batch is checked against the
+  * dispatcher's cache of the keys it logged within [[MaxHoldUs]] of its
+  * clock. Either way replays of LOGGED rows are no-ops. The remaining
+  * window is a crash BETWEEN `act` and the log append: that batch's fresh
+  * rows re-dispatch once on restart (dispatch-then-log keeps at-least-once
+  * — the reference's mod-API calls are idempotent bans/marks, where a
+  * duplicate POST is harmless and a LOST one is not; logging first would
+  * invert that into at-most-once). The log
   * carries `batch_id` as the audit trail the reference keeps implicitly in
   * Zulip history.
   *
@@ -68,98 +69,79 @@ object ActionSink {
 }
 
 /** One query's delayed effectively-once dispatch (GraftApp builds one per
-  * start). Each row is acted on once the event-time clock (max `ts_us`
-  * matched so far — the stream's own watermark) reaches its `due_us`
-  * deadline (= ts_us + [[ActionSink.actionDelayUs]]): this executes the
-  * reference's randomized hold (eventhandler.rs:180-186 sleeps the spawned
-  * action task) without parking threads. Rows already due are acted on in
-  * the batch that matched them; only later ones are appended to the pending
-  * log, and that log is read back only once its earliest deadline is due.
-  * Like the reference, an action with an unreached deadline survives a
-  * crash: it is held in the pending log, not lost with the process. A tail
-  * event whose deadline no later event ever passes dispatches on the next
-  * batch after one arrives. `act` runs before the log append.
+  * start). Each row is acted on once the batch clock (the largest `nowUs`
+  * passed so far; GraftApp passes the time its batch stamped on every signup)
+  * reaches its `due_us` deadline (= ts_us + [[ActionSink.actionDelayUs]]):
+  * this executes the reference's randomized hold (eventhandler.rs:180-186
+  * sleeps the spawned action task) without parking threads. Rows already due
+  * are acted on in the batch that matched them. Later ones wait in memory
+  * until a batch's clock passes their deadline, and are appended to the
+  * pending log when they are held, so an action with an unreached deadline
+  * survives a crash, as in the reference. `act` runs before the log append.
   *
-  * Dedup has two paths. A steady batch dedups its due rows in memory,
-  * within the batch and then against the keys this dispatcher logged whose
-  * `ts_us` is at most [[ActionSink.MaxHoldUs]] behind the clock; it runs no
-  * job for this. So an identical signup (same `event_id`) that comes back
-  * after that horizon is acted on again, as the reference's in-memory
-  * bookkeeping does. Two kinds of batch anti-join the whole dispatch log
-  * instead ([[ActionSink.undispatched]]): a dispatcher's first batch with
-  * matches or held rows, when the dispatch log exists, since it may be a
-  * restart's replay stamped with fresh, arbitrarily later `ts_us`; and any
-  * batch that reads the pending log back, which returns every held row that
-  * ever came due, long-fired ones included.
+  * Only a dispatcher's first batch reads the logs. It seeds the held rows
+  * from the pending rows not yet in the dispatch log, seeds the keys from the
+  * dispatch log's rows whose `ts_us` is at most [[ActionSink.MaxHoldUs]]
+  * behind the clock, and anti-joins the batch against the whole dispatch log
+  * ([[ActionSink.undispatched]]), since it may be a restart's replay stamped
+  * with fresh, arbitrarily later `ts_us`. So a restart (or a fresh query on
+  * the same directories) neither fires a held row early nor loses one. With
+  * neither log present it reads nothing.
   *
-  * The clock, the earliest pending deadline and the recent keys are a cache
-  * of the logs: on its first batch a dispatcher seeds the first two from the
-  * pending rows not yet in the dispatch log and the keys from the dispatch
-  * log's recent rows, so a restart (or a fresh query on the same
-  * directories) neither fires a held row early nor loses one. Not
-  * thread-safe: a query calls [[dispatch]] from one thread, and a failed
-  * call fails its query, so a dispatcher never outlives a failed batch. */
+  * Every batch then dedups in memory, within the batch and against the keys
+  * this dispatcher logged within [[ActionSink.MaxHoldUs]] of the clock, and
+  * runs no job for it. So an identical signup (same `event_id`) that comes
+  * back after that horizon is acted on again, as the reference's in-memory
+  * bookkeeping does. Not thread-safe: a query calls [[dispatch]] from one
+  * thread, and a failed call fails its query, so a dispatcher never outlives
+  * a failed batch. */
 final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: String) {
-  private var seeded = false
-  private var clockUs = Long.MinValue // max ts_us matched so far
-  private var nextDueUs = Long.MaxValue // earliest deadline held in pending/
-  /** (event_id, rule_name) → `ts_us` of the logged keys within the horizon,
-    * seeded from the dispatch log by the first batch that has a clock */
+  private var started = false
+  private var clockUs = Long.MinValue // the largest nowUs so far
+  /** rows whose deadline the clock has not reached */
+  private val held = mutable.ArrayBuffer.empty[Row]
+  /** (event_id, rule_name) → `ts_us` of the logged keys within the horizon */
   private val logged = mutable.HashMap.empty[(Long, String), Long]
-  private var keysSeeded = false
 
   private def exists(dir: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(dir)
     path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)
   }
 
-  def dispatch(batch: DataFrame, batchId: Long)(act: DataFrame => Unit): Unit = {
+  /** Act on `batch`'s due rows and the held rows that `nowUs` makes due. */
+  def dispatch(batch: DataFrame, batchId: Long, nowUs: Long)(act: DataFrame => Unit): Unit = {
     val schema = batch.schema
     def local(rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, schema)
-    def pending = spark.read.schema(schema).parquet(pendingDir)
     val (idIdx, ruleIdx) = (schema.fieldIndex("event_id"), schema.fieldIndex("rule_name"))
     val (tsIdx, dueIdx) = (schema.fieldIndex("ts_us"), schema.fieldIndex("due_us"))
     def key(r: Row) = (r.getLong(idIdx), r.getString(ruleIdx))
-    if (!seeded) {
-      if (exists(pendingDir)) {
-        val held = ActionSink.undispatched(spark, pending, logDir)
-          .agg(max(col("ts_us")), min(col("due_us"))).head()
-        if (!held.isNullAt(0)) { clockUs = held.getLong(0); nextDueUs = held.getLong(1) }
-      }
-      seeded = true
-    }
-    // one collect of the matches: the source's trigger window bounds them
-    val rows = batch.collect().toSeq
-    rows.foreach(r => clockUs = math.max(clockUs, r.getLong(tsIdx)))
-    if (clockUs == Long.MinValue) return // nothing matched or held yet
+    clockUs = math.max(clockUs, nowUs)
     val horizonUs = clockUs - ActionSink.MaxHoldUs
-    // a first batch may be a replay of logged rows; with no log it is not
-    val replayable = !keysSeeded && exists(logDir)
-    if (replayable)
-      spark.read.schema(StructType(Seq("event_id", "rule_name", "ts_us").map(schema(_))))
-        .parquet(logDir).filter(col("ts_us") >= horizonUs).collect()
-        .foreach(r => logged((r.getLong(0), r.getString(1))) = r.getLong(2))
-    keysSeeded = true
+    // one collect of the matches: the source's trigger window bounds them
+    val rows =
+      if (started) batch.collect().toSeq
+      else {
+        if (exists(pendingDir))
+          held ++= ActionSink.undispatched(spark,
+            spark.read.schema(schema).parquet(pendingDir), logDir).collect()
+        if (!exists(logDir)) batch.collect().toSeq
+        else {
+          spark.read.schema(StructType(Seq("event_id", "rule_name", "ts_us").map(schema(_))))
+            .parquet(logDir).filter(col("ts_us") >= horizonUs).collect()
+            .foreach(r => logged((r.getLong(0), r.getString(1))) = r.getLong(2))
+          ActionSink.undispatched(spark, batch, logDir).collect().toSeq
+        }
+      }
+    started = true
     logged.filterInPlace((_, ts) => ts >= horizonUs)
     val (dueNow, later) = rows.partition(_.getLong(dueIdx) <= clockUs)
     if (later.nonEmpty) {
       local(later).coalesce(1).write.mode("append").parquet(pendingDir)
-      nextDueUs = math.min(nextDueUs, later.map(_.getLong(dueIdx)).min)
+      held ++= later
     }
-    val heldDue = nextDueUs <= clockUs
-    if (dueNow.isEmpty && !heldDue) return
-    val fresh =
-      if (heldDue) {
-        // a held deadline has passed: read the held rows back, and find the
-        // next deadline among those still waiting
-        val clock = clockUs
-        val next = pending.filter(col("due_us") > clock).agg(min(col("due_us"))).head()
-        nextDueUs = if (next.isNullAt(0)) Long.MaxValue else next.getLong(0)
-        ActionSink.undispatched(spark,
-          local(dueNow).unionByName(pending.filter(col("due_us") <= clock)), logDir)
-          .collect().toSeq
-      } else if (replayable) ActionSink.undispatched(spark, local(dueNow), logDir).collect().toSeq
-      else dueNow.distinctBy(key).filterNot(r => logged.contains(key(r)))
+    val heldDue = held.filter(_.getLong(dueIdx) <= clockUs)
+    held.filterInPlace(_.getLong(dueIdx) > clockUs)
+    val fresh = (dueNow ++ heldDue).distinctBy(key).filterNot(r => logged.contains(key(r)))
     if (fresh.nonEmpty) {
       act(local(fresh))
       local(fresh).coalesce(1).withColumn("batch_id", lit(batchId))

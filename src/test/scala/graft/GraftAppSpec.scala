@@ -258,6 +258,14 @@ class GraftAppSpec extends AnyFunSuite {
     assert(reply("signup seen mal1").contains("Seen: mal1 (1 events)"))
   }
 
+  test("delayed dispatch: a held close fires on the first batch past its deadline, match or not") {
+    val (handle, _, posted) = app(Seq(rule("r_close", "mal").copy(actions = "close")))
+    handle(signups("mal1" -> 0L), 0L)
+    assert(posted.isEmpty, "a close is held for 31.5 to 101.5 s")
+    handle(signups("bob" -> 200000000L), 1L)
+    assert(posted == Seq("action close on mal1 (rule r_close)"))
+  }
+
   test("seen: the 10 001st signup pushes the oldest one out") {
     val seen = new GraftApp.SeenRing
     val cap = GraftApp.SeenRing.Capacity
@@ -291,6 +299,28 @@ class GraftAppSpec extends AnyFunSuite {
     handle(signups("mal3" -> 3L), 2L)
     assert(posted == Seq("action notify on mal1 (rule r_mal)",
       "action notify on mal2 (rule r_mal)"), "an expired rule matched")
+  }
+
+  test("real clock: each expiry notice is posted once, and the rule is dropped 3 days after expiry") {
+    val clock = new StepClock(Instant.parse("2031-03-01T00:00:00Z"))
+    val work = java.nio.file.Files.createTempDirectory("graft_expiry").toString
+    val rulesPath = s"$work/rules.json"
+    val expiry = clock.now.plusSeconds(10L * 86400L)
+    RuleStore.save(Rules.dfFor(spark,
+      Seq(rule("r_exp", "mal", Some(expiry.toEpochMilli * 1000L)))), rulesPath)
+    val reply = ZulipRtm.parseOrError(
+      GraftApp.commandDispatcher(spark, rulesPath, new GraftApp.SeenRing, clock))
+    // two sweeps at `t`, at the clock's time, as the app's expiry loop runs them
+    def sweepsAt(t: Instant): Seq[(String, String)] = {
+      clock.now = t
+      Seq.fill(2)(GraftApp.sweepRules(spark, rulesPath, clock.millis() * 1000L)).flatten
+    }
+    assert(sweepsAt(expiry.minusSeconds(12L * 3600L)) == Seq("r_exp" -> "expiring_soon"))
+    assert(sweepsAt(expiry.plusSeconds(3600L)) == Seq("r_exp" -> "expired"))
+    assert(sweepsAt(expiry.plusSeconds(2L * 86400L)).isEmpty)
+    assert(reply("signup rules list").contains("r_exp"), "kept for 3 days after expiry")
+    assert(sweepsAt(expiry.plusSeconds(3L * 86400L + 3600L)).isEmpty)
+    assert(reply("signup rules list").contains("No rules."))
   }
 
   test("job budget: a steady micro-batch with matches and no holds runs at most 3 Spark jobs") {

@@ -48,7 +48,9 @@ class RecoverySpec extends AnyFunSuite {
     val dispatcher = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
     matched.writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dispatcher.dispatch(batch, batchId)(act)
+        // the batch's clock: the largest `ts_us` among its rows
+        val now = batch.agg(max(col("ts_us"))).head()
+        if (!now.isNullAt(0)) dispatcher.dispatch(batch, batchId, now.getLong(0))(act)
       }
       .start()
   }
@@ -273,18 +275,18 @@ class RecoverySpec extends AnyFunSuite {
     val acted = new Acted
     // deadline of a close at t=0: somewhere in [31.5, 101.5) s
     new DelayedDispatcher(spark, pendingDir, logDir)
-      .dispatch(matches((1L, "r_close", "close", 0L)), 0L)(acted(_))
+      .dispatch(matches((1L, "r_close", "close", 0L)), 0L, 0L)(acted(_))
     assert(acted.ids.isEmpty && spark.read.parquet(pendingDir).count() == 1)
 
     // restart: a new dispatcher on the same logs
     val d2 = new DelayedDispatcher(spark, pendingDir, logDir)
-    d2.dispatch(matches((2L, "r_notify", "notify", 10000000L)), 1L)(acted(_))
+    d2.dispatch(matches((2L, "r_notify", "notify", 10000000L)), 1L, 10000000L)(acted(_))
     assert(acted.ids == Seq(2L), "the clock (10 s) is before the close's deadline")
-    d2.dispatch(matches((3L, "r_notify", "notify", 200000000L)), 2L)(acted(_))
+    d2.dispatch(matches((3L, "r_notify", "notify", 200000000L)), 2L, 200000000L)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L, 3L), "the clock (200 s) passed the deadline")
-    d2.dispatch(matches((4L, "r_notify", "notify", 300000000L)), 3L)(acted(_))
+    d2.dispatch(matches((4L, "r_notify", "notify", 300000000L)), 3L, 300000000L)(acted(_))
     new DelayedDispatcher(spark, pendingDir, logDir)
-      .dispatch(matches((5L, "r_notify", "notify", 400000000L)), 4L)(acted(_))
+      .dispatch(matches((5L, "r_notify", "notify", 400000000L)), 4L, 400000000L)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L, 3L, 4L, 5L), s"the close fired once: ${acted.ids}")
   }
 
@@ -293,8 +295,8 @@ class RecoverySpec extends AnyFunSuite {
     val logDir = tmp("notify_log") + "/log"
     val acted = new Acted
     val d = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
-    d.dispatch(matches((1L, "r_a", "notify", 0L), (2L, "r_b", "alt", 5L)), 0L)(acted(_))
-    d.dispatch(matches((3L, "r_a", "notify", 10L)), 1L)(acted(_))
+    d.dispatch(matches((1L, "r_a", "notify", 0L), (2L, "r_b", "alt", 5L)), 0L, 5L)(acted(_))
+    d.dispatch(matches((3L, "r_a", "notify", 10L)), 1L, 10L)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L, 3L))
     assert(!exists(pendingDir), "nothing was held, so nothing was staged")
     assert(spark.read.parquet(logDir).count() == 3)
@@ -306,15 +308,17 @@ class RecoverySpec extends AnyFunSuite {
     val acted = new Acted
     val batches = Seq(
       matches((1L, "r_a", "notify", 0L), (1L, "r_a", "notify", 0L),
-        (2L, "r_close", "close", 0L), (2L, "r_close", "close", 0L)),
-      matches((3L, "r_a", "notify", 200000000L)))
+        (2L, "r_close", "close", 0L), (2L, "r_close", "close", 0L)) -> 0L,
+      matches((3L, "r_a", "notify", 200000000L)) -> 200000000L)
     val d = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
-    batches.zipWithIndex.foreach { case (b, i) => d.dispatch(b, i.toLong)(acted(_)) }
+    batches.zipWithIndex.foreach { case ((b, now), i) => d.dispatch(b, i.toLong, now)(acted(_)) }
     assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"each match fires once: ${acted.ids}")
 
     // at-least-once delivery replays both batches into a new query
     val replay = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
-    batches.zipWithIndex.foreach { case (b, i) => replay.dispatch(b, i.toLong)(acted(_)) }
+    batches.zipWithIndex.foreach { case ((b, now), i) =>
+      replay.dispatch(b, i.toLong, now)(acted(_))
+    }
     assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"the replay fired again: ${acted.ids}")
     assert(spark.read.parquet(logDir).count() == 3)
   }
@@ -324,10 +328,10 @@ class RecoverySpec extends AnyFunSuite {
     val acted = new Acted
     val d = new graft.streaming.DelayedDispatcher(spark,
       tmp("horizon_pend") + "/pending", tmp("horizon_log") + "/log")
-    d.dispatch(matches((1L, "r_a", "notify", 0L)), 0L)(acted(_))
-    d.dispatch(matches((1L, "r_a", "notify", MaxHoldUs)), 1L)(acted(_))
+    d.dispatch(matches((1L, "r_a", "notify", 0L)), 0L, 0L)(acted(_))
+    d.dispatch(matches((1L, "r_a", "notify", MaxHoldUs)), 1L, MaxHoldUs)(acted(_))
     assert(acted.ids == Seq(1L), "within the horizon the same key is a duplicate")
-    d.dispatch(matches((1L, "r_a", "notify", MaxHoldUs + 1L)), 2L)(acted(_))
+    d.dispatch(matches((1L, "r_a", "notify", MaxHoldUs + 1L)), 2L, MaxHoldUs + 1L)(acted(_))
     assert(acted.ids == Seq(1L, 1L), "past the horizon the same key fires again")
   }
 
@@ -336,11 +340,12 @@ class RecoverySpec extends AnyFunSuite {
     val logDir = tmp("late_log") + "/log"
     val acted = new Acted
     new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
-      .dispatch(matches((1L, "r_a", "notify", 0L), (2L, "r_b", "alt", 0L)), 0L)(acted(_))
+      .dispatch(matches((1L, "r_a", "notify", 0L), (2L, "r_b", "alt", 0L)), 0L, 0L)(acted(_))
     val replay = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
     val tenMin = 600L * 1000000L
-    replay.dispatch(matches((1L, "r_a", "notify", tenMin), (2L, "r_b", "alt", tenMin)), 0L)(acted(_))
-    replay.dispatch(matches((3L, "r_a", "notify", tenMin + 1L)), 1L)(acted(_))
+    replay.dispatch(matches((1L, "r_a", "notify", tenMin), (2L, "r_b", "alt", tenMin)), 0L,
+      tenMin)(acted(_))
+    replay.dispatch(matches((3L, "r_a", "notify", tenMin + 1L)), 1L, tenMin + 1L)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"the replay fired again: ${acted.ids}")
   }
 
@@ -350,14 +355,45 @@ class RecoverySpec extends AnyFunSuite {
     val acted = new Acted
     val d = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
     val s = 1000000L
-    d.dispatch(matches((1L, "r_close", "close", 0L)), 0L)(acted(_))
-    d.dispatch(matches((2L, "r_a", "notify", 200L * s)), 1L)(acted(_))
+    d.dispatch(matches((1L, "r_close", "close", 0L)), 0L, 0L)(acted(_))
+    d.dispatch(matches((2L, "r_a", "notify", 200L * s)), 1L, 200L * s)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L), "the close came due at 200 s")
     // much later, a second held close: reading its deadline back also
     // returns the first close, whose key is long past the horizon
-    d.dispatch(matches((3L, "r_close", "close", 1000L * s)), 2L)(acted(_))
-    d.dispatch(matches((4L, "r_a", "notify", 1200L * s)), 3L)(acted(_))
+    d.dispatch(matches((3L, "r_close", "close", 1000L * s)), 2L, 1000L * s)(acted(_))
+    d.dispatch(matches((4L, "r_a", "notify", 1200L * s)), 3L, 1200L * s)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L, 3L, 4L), s"the old close fired again: ${acted.ids}")
+  }
+
+  test("DelayedDispatcher: after its first batch, firing a held close and a due-now notify runs 1 Spark job") {
+    val pendingDir = tmp("jobs_pend") + "/pending"
+    val logDir = tmp("jobs_log") + "/log"
+    val acted = new Acted
+    val d = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+    d.dispatch(matches((1L, "r_close", "close", 0L)), 0L, 0L)(acted(_))
+    assert(acted.ids.isEmpty, "the close is held")
+    // the jobs this thread starts, told apart by a local property
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.tag") == tag))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty("graft.spec.tag", tag)
+    try {
+      d.dispatch(matches((2L, "r_a", "notify", 200000000L)), 1L, 200000000L)(acted(_))
+      // the listener bus delivers job starts asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (jobs.get() == 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      Thread.sleep(500)
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.spec.tag", null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(acted.ids.sorted == Seq(1L, 2L), "the clock (200 s) passed the close's deadline")
+    assert(jobs.get() == 1, s"Spark jobs for the batch: ${jobs.get()} (only the dispatched/ append)")
   }
 
   test("ActionSink.dispatch end-to-end over a streaming source") {

@@ -17,9 +17,9 @@ import org.apache.spark.sql.types.StructType
   * dispatcher makes the side effect idempotent the standard way — an
   * append-only dispatch log keyed by (event_id, rule_name). A dispatcher's
   * first batch, which may be a replay, is anti-joined against the log
-  * ([[undispatched]]); every later batch is checked against the
-  * dispatcher's cache of the keys it logged within [[MaxHoldUs]] of its
-  * clock. Either way replays of LOGGED rows are no-ops. The remaining
+  * ([[undispatched]]); every later batch is checked against the keys the
+  * dispatcher holds or fired within [[MaxHoldUs]] of its clock. Either way
+  * replays of LOGGED rows are no-ops. The remaining
   * window is a crash BETWEEN `act` and the log append: that batch's fresh
   * rows re-dispatch once on restart (dispatch-then-log keeps at-least-once
   * — the reference's mod-API calls are idempotent bans/marks, where a
@@ -79,29 +79,32 @@ object ActionSink {
   * pending log when they are held, so an action with an unreached deadline
   * survives a crash, as in the reference. `act` runs before the log append.
   *
-  * Only a dispatcher's first batch reads the logs. It seeds the held rows
-  * from the pending rows not yet in the dispatch log, seeds the keys from the
-  * dispatch log's rows whose `ts_us` is at most [[ActionSink.MaxHoldUs]]
-  * behind the clock, and anti-joins the batch against the whole dispatch log
-  * ([[ActionSink.undispatched]]), since it may be a restart's replay stamped
-  * with fresh, arbitrarily later `ts_us`. So a restart (or a fresh query on
-  * the same directories) neither fires a held row early nor loses one. With
-  * neither log present it reads nothing.
+  * Dedup happens when a row is matched: a row whose key (event_id,
+  * rule_name) is already held, or fired within [[ActionSink.MaxHoldUs]] of
+  * the clock, is dropped, as is a second copy within its batch. A fired key
+  * is stamped with the clock it fired at, so an identical signup (same
+  * `event_id`) is acted on again only when it is matched more than that
+  * horizon after the first one fired, as the reference's in-memory
+  * bookkeeping allows. This dedup runs in the driver and starts no job.
   *
-  * Every batch then dedups in memory, within the batch and against the keys
-  * this dispatcher logged within [[ActionSink.MaxHoldUs]] of the clock, and
-  * runs no job for it. So an identical signup (same `event_id`) that comes
-  * back after that horizon is acted on again, as the reference's in-memory
-  * bookkeeping does. Not thread-safe: a query calls [[dispatch]] from one
-  * thread, and a failed call fails its query, so a dispatcher never outlives
-  * a failed batch. */
+  * Only a dispatcher's first batch reads the logs. It seeds the held rows
+  * from the pending rows not yet in the dispatch log, stamps the dispatch
+  * log's keys whose `ts_us` is within the horizon with that `ts_us` (a lower
+  * bound of when they fired), and anti-joins the batch against the whole
+  * dispatch log ([[ActionSink.undispatched]]), since it may be a restart's
+  * replay stamped with fresh, arbitrarily later `ts_us`; a replayed copy of a
+  * held row is dropped as held. So a restart (or a fresh query on the same
+  * directories) neither fires a held row early or twice nor loses one. With
+  * neither log present it reads nothing. Not thread-safe: a query calls
+  * [[dispatch]] from one thread, and a failed call fails its query, so a
+  * dispatcher never outlives a failed batch. */
 final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: String) {
   private var started = false
   private var clockUs = Long.MinValue // the largest nowUs so far
-  /** rows whose deadline the clock has not reached */
-  private val held = mutable.ArrayBuffer.empty[Row]
-  /** (event_id, rule_name) → `ts_us` of the logged keys within the horizon */
-  private val logged = mutable.HashMap.empty[(Long, String), Long]
+  /** (event_id, rule_name) → the row, for rows whose deadline the clock has not reached */
+  private val held = mutable.HashMap.empty[(Long, String), Row]
+  /** (event_id, rule_name) → the clock it fired at, for keys fired within the horizon */
+  private val fired = mutable.HashMap.empty[(Long, String), Long]
 
   private def exists(dir: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(dir)
@@ -113,7 +116,7 @@ final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: S
     val schema = batch.schema
     def local(rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, schema)
     val (idIdx, ruleIdx) = (schema.fieldIndex("event_id"), schema.fieldIndex("rule_name"))
-    val (tsIdx, dueIdx) = (schema.fieldIndex("ts_us"), schema.fieldIndex("due_us"))
+    val dueIdx = schema.fieldIndex("due_us")
     def key(r: Row) = (r.getLong(idIdx), r.getString(ruleIdx))
     clockUs = math.max(clockUs, nowUs)
     val horizonUs = clockUs - ActionSink.MaxHoldUs
@@ -122,31 +125,31 @@ final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: S
       if (started) batch.collect().toSeq
       else {
         if (exists(pendingDir))
-          held ++= ActionSink.undispatched(spark,
-            spark.read.schema(schema).parquet(pendingDir), logDir).collect()
+          ActionSink.undispatched(spark, spark.read.schema(schema).parquet(pendingDir), logDir)
+            .collect().foreach(r => held(key(r)) = r)
         if (!exists(logDir)) batch.collect().toSeq
         else {
           spark.read.schema(StructType(Seq("event_id", "rule_name", "ts_us").map(schema(_))))
             .parquet(logDir).filter(col("ts_us") >= horizonUs).collect()
-            .foreach(r => logged((r.getLong(0), r.getString(1))) = r.getLong(2))
+            .foreach(r => fired((r.getLong(0), r.getString(1))) = r.getLong(2))
           ActionSink.undispatched(spark, batch, logDir).collect().toSeq
         }
       }
     started = true
-    logged.filterInPlace((_, ts) => ts >= horizonUs)
-    val (dueNow, later) = rows.partition(_.getLong(dueIdx) <= clockUs)
+    fired.filterInPlace((_, atUs) => atUs >= horizonUs)
+    val (dueNow, later) = rows.distinctBy(key)
+      .filterNot(r => held.contains(key(r)) || fired.contains(key(r)))
+      .partition(_.getLong(dueIdx) <= clockUs)
     if (later.nonEmpty) {
       local(later).coalesce(1).write.mode("append").parquet(pendingDir)
-      held ++= later
+      later.foreach(r => held(key(r)) = r)
     }
-    val heldDue = held.filter(_.getLong(dueIdx) <= clockUs)
-    held.filterInPlace(_.getLong(dueIdx) > clockUs)
-    val fresh = (dueNow ++ heldDue).distinctBy(key).filterNot(r => logged.contains(key(r)))
+    val fresh = dueNow ++ held.values.filter(_.getLong(dueIdx) <= clockUs)
     if (fresh.nonEmpty) {
       act(local(fresh))
       local(fresh).coalesce(1).withColumn("batch_id", lit(batchId))
         .write.mode("append").parquet(logDir)
-      fresh.foreach(r => logged(key(r)) = r.getLong(tsIdx))
+      fresh.foreach { r => held -= key(r); fired(key(r)) = clockUs }
     }
   }
 }

@@ -358,11 +358,55 @@ class RecoverySpec extends AnyFunSuite {
     d.dispatch(matches((1L, "r_close", "close", 0L)), 0L, 0L)(acted(_))
     d.dispatch(matches((2L, "r_a", "notify", 200L * s)), 1L, 200L * s)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L), "the close came due at 200 s")
-    // much later, a second held close: reading its deadline back also
-    // returns the first close, whose key is long past the horizon
+    // much later, a second held close comes due, long past the first
+    // close's horizon
     d.dispatch(matches((3L, "r_close", "close", 1000L * s)), 2L, 1000L * s)(acted(_))
     d.dispatch(matches((4L, "r_a", "notify", 1200L * s)), 3L, 1200L * s)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L, 3L, 4L), s"the old close fired again: ${acted.ids}")
+    // a restart reads the pending log back: both closes are in it, and both
+    // already fired
+    new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+      .dispatch(matches((5L, "r_a", "notify", 1400L * s)), 4L, 1400L * s)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L, 4L, 5L), s"a close fired again: ${acted.ids}")
+  }
+
+  test("DelayedDispatcher: a held close replayed 10 min later on a fresh dispatcher fires once") {
+    import graft.streaming.ActionSink.MaxHoldUs
+    val pendingDir = tmp("replay_held_pend") + "/pending"
+    val logDir = tmp("replay_held_log") + "/log"
+    val acted = new Acted
+    // the batch holds the close, then its query dies before the commit
+    new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+      .dispatch(matches((1L, "r_close", "close", 0L)), 0L, 0L)(acted(_))
+    assert(acted.ids.isEmpty, "the close is held")
+    // the restart replays that batch stamped with a fresh time: the held copy
+    // read back from the pending log is past its deadline and fires, and the
+    // replayed copy (same key, later deadline) is a duplicate of it
+    val tenMin = 600L * 1000000L
+    val d = new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
+    d.dispatch(matches((1L, "r_close", "close", tenMin)), 0L, tenMin)(acted(_))
+    assert(acted.ids == Seq(1L), "the close read back from the pending log is due")
+    d.dispatch(matches((2L, "r_a", "notify", tenMin + MaxHoldUs)), 1L, tenMin + MaxHoldUs)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L), s"the close fired twice: ${acted.ids}")
+  }
+
+  test("DelayedDispatcher: an identical signup matched while its close is held, or soon after it fired, is a duplicate") {
+    import graft.streaming.ActionSink.MaxHoldUs
+    val acted = new Acted
+    val d = new graft.streaming.DelayedDispatcher(spark,
+      tmp("held_dup_pend") + "/pending", tmp("held_dup_log") + "/log")
+    val s = 1000000L
+    d.dispatch(matches((1L, "r_close", "close", 0L)), 0L, 0L)(acted(_))
+    // the same signup again at 50 s, whether or not the first came due yet
+    d.dispatch(matches((1L, "r_close", "close", 50L * s)), 1L, 50L * s)(acted(_))
+    d.dispatch(matches((2L, "r_a", "notify", MaxHoldUs)), 2L, MaxHoldUs)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L), "the close came due by 101.5 s")
+    // and again 10 s after it fired
+    d.dispatch(matches((1L, "r_close", "close", MaxHoldUs + 10L * s)), 3L,
+      MaxHoldUs + 10L * s)(acted(_))
+    d.dispatch(matches((3L, "r_a", "notify", 2 * MaxHoldUs + 10L * s)), 4L,
+      2 * MaxHoldUs + 10L * s)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"the close fired twice: ${acted.ids}")
   }
 
   test("DelayedDispatcher: after its first batch, firing a held close and a due-now notify runs 1 Spark job") {

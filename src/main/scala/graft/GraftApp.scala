@@ -31,10 +31,10 @@ import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
   *     vector; rebuilt from the rules file only after a mutation) in one
   *     collect, hands the matches to one [[DelayedDispatcher]] per start
   *     (due-now actions fire in the same batch; the randomized 30–100 s holds
-  *     wait in memory, logged to the pending log for restarts, until a
-  *     batch's time passes their deadline; effectively-once either way),
-  *     and then adds the batch's signups to the app's [[SeenRing]] for
-  *     `seen`.
+  *     wait in memory until a batch's time passes their deadline;
+  *     effectively-once either way, through per-batch JSON-line files in
+  *     the pending and dispatch logs, with no Spark job), and then adds the
+  *     batch's signups to the app's [[SeenRing]] for `seen`.
   *   - `zulip::rtm::connect_to_zulip` + `status::status_loop` → [[ZulipRtm]]
   *     under [[ZulipSupervisor]] (300 s ping watchdog), commands dispatched
   *     by [[commandDispatcher]] against the same rule snapshot and file.
@@ -267,8 +267,10 @@ object GraftApp {
   }
 
   /** Start the whole program. `feedUrl` is the NDJSON signup feed (the
-    * reference's event stream); rules live at `rulesPath`; actions land in
-    * `workDir/dispatched` with the pending hold in `workDir/pending`.
+    * reference's event stream); rules live at `rulesPath`; fired actions
+    * are logged to `workDir/dispatched/<batchId>` and held ones to
+    * `workDir/pending/<batchId>`, as JSON lines (`spark.read.json` reads
+    * either log).
     * `clock` stamps rule additions, renewals, the expiry sweep and the
     * match gate. */
   def start(

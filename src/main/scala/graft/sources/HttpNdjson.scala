@@ -21,6 +21,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.streaming.BatchJournal
+
 /** Custom Structured Streaming source for HTTP chunked NDJSON / SSE feeds —
   * the reference's ingest loop (eventstream.rs:14-73: open a chunked HTTP
   * response, split on newlines, reconnect with a fixed backoff when the
@@ -259,12 +261,11 @@ class HttpNdjsonMicroBatchStream(
   // process's buffer. Format: one line per event, `<recvTsUs> <base64(utf8)>`
   // — base64 because an SSE event can legally contain embedded newlines.
   // All journal IO happens on the driver (plan/commit time), through
-  // [[HttpReplayJournal]]: java.nio for local checkpoint dirs, Hadoop FS
+  // [[BatchJournal]]: java.nio for local checkpoint dirs, Hadoop FS
   // for hdfs/object-store ones (see the journal's scaladoc for why the
   // local path must NOT go through the Hadoop local FS).
 
-  private lazy val journal: Option[HttpReplayJournal] =
-    replayDir.map(HttpReplayJournal.open)
+  private lazy val journal: Option[BatchJournal] = replayDir.map(BatchJournal.open)
 
   private def parseWindow(name: String): Option[(Long, Long)] =
     name.split("-") match {
@@ -499,81 +500,3 @@ class HttpNdjsonMicroBatchStream(
 
 /** A [start, end) slice of received lines, shipped to the executor. */
 case class HttpLinesPartition(rows: Array[(String, Long)]) extends InputPartition
-
-/** Minimal atomic file ops for the http-ndjson replay journal.
-  *
-  * Two backends: java.nio for local checkpoint dirs and Hadoop FS for
-  * hdfs/object-store ones. The local path must NOT go through the Hadoop
-  * local FS: without native-hadoop (the common laptop/container case),
-  * `RawLocalFileSystem.setPermission` FORKS a `chmod` process on every
-  * file create — at one journal write per micro-batch that starves a
-  * fast trigger loop (observed: `processAllAvailable` never quiescing
-  * against a 100 ms feed).
-  */
-private[sources] sealed trait HttpReplayJournal {
-  def names(): Seq[String]
-  def exists(name: String): Boolean
-  protected def input(name: String): java.io.InputStream
-  def readLines(name: String): Seq[String] = {
-    val src = scala.io.Source.fromInputStream(input(name), "UTF-8")
-    try src.getLines().toVector finally src.close()
-  }
-  /** Write-then-rename; an existing target is REPLACED. */
-  def writeAtomic(name: String, lines: Iterator[String]): Unit
-  def delete(name: String): Unit
-}
-
-private[sources] object HttpReplayJournal {
-  def open(dir: String): HttpReplayJournal = {
-    val uri = try java.net.URI.create(dir) catch { case _: Throwable => null }
-    if (uri == null || uri.getScheme == null)
-      new NioReplayJournal(java.nio.file.Paths.get(dir))
-    else if (uri.getScheme == "file")
-      new NioReplayJournal(java.nio.file.Paths.get(uri.getPath))
-    else new HadoopReplayJournal(dir)
-  }
-}
-
-private final class NioReplayJournal(dir: java.nio.file.Path) extends HttpReplayJournal {
-  import java.nio.file.{Files, StandardCopyOption}
-  override def names(): Seq[String] =
-    Option(dir.toFile.list()).fold(Seq.empty[String])(_.toSeq) // null: no dir yet
-  override def exists(name: String): Boolean = Files.exists(dir.resolve(name))
-  override protected def input(name: String) = Files.newInputStream(dir.resolve(name))
-  override def writeAtomic(name: String, lines: Iterator[String]): Unit = {
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s"._$name.tmp")
-    val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-    try lines.foreach { l => w.write(l); w.write('\n') } finally w.close()
-    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-  override def delete(name: String): Unit = Files.deleteIfExists(dir.resolve(name))
-}
-
-private final class HadoopReplayJournal(dir: String) extends HttpReplayJournal {
-  import org.apache.hadoop.fs.Path
-  private val root = new Path(dir)
-  private lazy val fs = root.getFileSystem(
-    try org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
-    catch { case _: Throwable => new org.apache.hadoop.conf.Configuration() })
-  override def names(): Seq[String] =
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
-  override def exists(name: String): Boolean = fs.exists(new Path(root, name))
-  override protected def input(name: String) = fs.open(new Path(root, name))
-  override def writeAtomic(name: String, lines: Iterator[String]): Unit = {
-    val tmp = new Path(root, s"._$name.tmp")
-    val dst = new Path(root, name)
-    val out = fs.create(tmp, true)
-    try {
-      val w = new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(out, StandardCharsets.UTF_8))
-      lines.foreach { l => w.write(l); w.write('\n') }
-      w.flush()
-    } finally out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
-  }
-  override def delete(name: String): Unit = fs.delete(new Path(root, name), false)
-}

@@ -4,33 +4,13 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
-/** Effectively-once action dispatch — the reference's rule-action firing
-  * (rules.rs:286-331: matched signup → mod-API endpoint call, optionally
-  * delayed) as a restart-safe step of a `foreachBatch` sink
-  * ([[DelayedDispatcher]], which GraftApp runs on every micro-batch).
-  *
-  * Structured Streaming's `foreachBatch` is at-least-once across restarts:
-  * a batch that dispatched but crashed before the commit re-runs. The
-  * dispatcher makes the side effect idempotent the standard way — an
-  * append-only dispatch log keyed by (event_id, rule_name). A dispatcher's
-  * first batch, which may be a replay, is anti-joined against the log
-  * ([[undispatched]]); every later batch is checked against the keys the
-  * dispatcher holds or fired within [[MaxHoldUs]] of its clock. Either way
-  * replays of LOGGED rows are no-ops. The remaining
-  * window is a crash BETWEEN `act` and the log append: that batch's fresh
-  * rows re-dispatch once on restart (dispatch-then-log keeps at-least-once
-  * — the reference's mod-API calls are idempotent bans/marks, where a
-  * duplicate POST is harmless and a LOST one is not; logging first would
-  * invert that into at-most-once). The log
-  * carries `batch_id` as the audit trail the reference keeps implicitly in
-  * Zulip history.
-  *
-  * `act` stands in for the HTTP call (the reference's POST to the mod API);
-  * it receives only rows never dispatched before.
-  */
+/** The reference's rule-action timing (rules.rs:286-331: matched signup →
+  * mod-API endpoint call, optionally delayed), which [[DelayedDispatcher]]
+  * executes as a restart-safe step of GraftApp's `foreachBatch` sink. */
 object ActionSink {
 
   /** Deterministic analog of the reference's randomized action delay
@@ -51,21 +31,6 @@ object ActionSink {
   /** The longest hold [[actionDelayUs]] gives: (30 + 69) s, +1.5 s for
     * `close`. It bounds how long a [[DelayedDispatcher]] remembers a key. */
   val MaxHoldUs: Long = (30L + 69L) * 1000000L + 1500000L
-
-  /** Rows of `batch` not yet in the dispatch log (dedup within the batch,
-    * then anti-join against the log). Only a genuinely ABSENT log means
-    * "everything is fresh" — a transient read failure (IO error, corrupt
-    * footer) must propagate, not silently re-arm every past action. */
-  def undispatched(spark: SparkSession, batch: DataFrame, logDir: String): DataFrame = {
-    val deduped = batch.dropDuplicates("event_id", "rule_name")
-    val path = new org.apache.hadoop.fs.Path(logDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) return deduped // no log yet: everything is fresh
-    // the log holds rows of this shape: a known schema skips the footer scan
-    val logged = spark.read.schema(StructType(Seq(batch.schema("event_id"),
-      batch.schema("rule_name")))).parquet(logDir)
-    deduped.join(logged, Seq("event_id", "rule_name"), "left_anti")
-  }
 }
 
 /** One query's delayed effectively-once dispatch (GraftApp builds one per
@@ -74,10 +39,9 @@ object ActionSink {
   * reaches its `due_us` deadline (= ts_us + [[ActionSink.actionDelayUs]]):
   * this executes the reference's randomized hold (eventhandler.rs:180-186
   * sleeps the spawned action task) without parking threads. Rows already due
-  * are acted on in the batch that matched them. Later ones wait in memory
-  * until a batch's clock passes their deadline, and are appended to the
-  * pending log when they are held, so an action with an unreached deadline
-  * survives a crash, as in the reference. `act` runs before the log append.
+  * are acted on in the batch that matched them; later ones wait in memory
+  * until a batch's clock passes their deadline. `act` stands in for the
+  * reference's POST to the mod API and receives only rows to act on.
   *
   * Dedup happens when a row is matched: a row whose key (event_id,
   * rule_name) is already held, or fired within [[ActionSink.MaxHoldUs]] of
@@ -85,71 +49,107 @@ object ActionSink {
   * is stamped with the clock it fired at, so an identical signup (same
   * `event_id`) is acted on again only when it is matched more than that
   * horizon after the first one fired, as the reference's in-memory
-  * bookkeeping allows. This dedup runs in the driver and starts no job.
+  * bookkeeping allows. This runs in the driver and starts no Spark job.
   *
-  * Only a dispatcher's first batch reads the logs. It seeds the held rows
-  * from the pending rows not yet in the dispatch log, stamps the dispatch
-  * log's keys whose `ts_us` is within the horizon with that `ts_us` (a lower
-  * bound of when they fired), and anti-joins the batch against the whole
-  * dispatch log ([[ActionSink.undispatched]]), since it may be a restart's
-  * replay stamped with fresh, arbitrarily later `ts_us`; a replayed copy of a
-  * held row is dropped as held. So a restart (or a fresh query on the same
-  * directories) neither fires a held row early or twice nor loses one. With
-  * neither log present it reads nothing. Not thread-safe: a query calls
-  * [[dispatch]] from one thread, and a failed call fails its query, so a
-  * dispatcher never outlives a failed batch. */
+  * Structured Streaming's `foreachBatch` is at-least-once: a batch that
+  * acted but crashed before its commit re-runs on restart. Two logs, one
+  * [[BatchJournal]] file per batch id, make that replay a no-op:
+  *   - `pending/<batchId>`: the batch's held rows that have not fired yet,
+  *     as JSON lines, written before `act` runs, then rewritten (or deleted)
+  *     after `act` when some of them fire;
+  *   - `dispatched/<batchId>`: the rows the batch fired, plus `batch_id` and
+  *     `fired_us` (the clock they fired at), written after `act` (a replay
+  *     writes the union of both runs' rows). It is the audit trail the
+  *     reference keeps in Zulip history; `spark.read.json` reads it.
+  * Only a dispatcher's first batch reads them: all of `pending/` (into the
+  * held rows), its own `dispatched/` file (those keys count as fired,
+  * whatever `ts_us` the replay carries), and the other `dispatched/` files,
+  * newest first, up to the first one that fired wholly before the horizon.
+  * Then it follows the rule above. A crash after `act` and before the logs
+  * are written re-fires some of that batch's rows once on restart: acting
+  * first keeps at-least-once (a duplicate ban or mark is harmless, a lost
+  * one is not). Not thread-safe: a query calls [[dispatch]] from one thread,
+  * and a failed call fails its query, so no dispatcher outlives a failed batch. */
 final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: String) {
+  private val pending = BatchJournal.open(pendingDir)
+  private val logs = BatchJournal.open(logDir)
   private var started = false
   private var clockUs = Long.MinValue // the largest nowUs so far
-  /** (event_id, rule_name) → the row, for rows whose deadline the clock has not reached */
-  private val held = mutable.HashMap.empty[(Long, String), Row]
+  /** (event_id, rule_name) → (the batch that held it, the row), for rows not yet due */
+  private val held = mutable.HashMap.empty[(Long, String), (Long, Row)]
   /** (event_id, rule_name) → the clock it fired at, for keys fired within the horizon */
   private val fired = mutable.HashMap.empty[(Long, String), Long]
 
-  private def exists(dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)
+  /** The rows of each of `journal`'s files `ids`, from one decode that gives
+    * one row per line (a line that does not parse gives a row of nulls). */
+  private def read(journal: BatchJournal, schema: StructType, ids: Seq[Long]): Seq[Seq[Row]] =
+    if (ids.isEmpty) Nil
+    else {
+      import spark.implicits._
+      // the JSON reader skips blank lines: drop them so rows line up with files
+      val lines = ids.map(id => journal.readLines(id.toString).filterNot(_.isBlank))
+      val rows = spark.read.schema(schema).json(lines.flatten.toDS()).collect()
+      val ends = lines.scanLeft(0)(_ + _.size)
+      ids.indices.map(i => rows.slice(ends(i), ends(i + 1)).toSeq)
+    }
+
+  /** Rewrite `pending/<batchId>` to the batch's rows still held, or delete it. */
+  private def settle(batchId: Long): Unit = {
+    val rows = held.values.collect { case (`batchId`, r) => r.json }
+    if (rows.isEmpty) pending.delete(batchId.toString)
+    else pending.writeAtomic(batchId.toString, rows.iterator)
   }
 
   /** Act on `batch`'s due rows and the held rows that `nowUs` makes due. */
   def dispatch(batch: DataFrame, batchId: Long, nowUs: Long)(act: DataFrame => Unit): Unit = {
     val schema = batch.schema
-    def local(rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, schema)
+    val logSchema = schema.add("batch_id", LongType).add("fired_us", LongType)
     val (idIdx, ruleIdx) = (schema.fieldIndex("event_id"), schema.fieldIndex("rule_name"))
-    val dueIdx = schema.fieldIndex("due_us")
+    val (dueIdx, firedIdx) = (schema.fieldIndex("due_us"), logSchema.fieldIndex("fired_us"))
     def key(r: Row) = (r.getLong(idIdx), r.getString(ruleIdx))
     clockUs = math.max(clockUs, nowUs)
     val horizonUs = clockUs - ActionSink.MaxHoldUs
-    // one collect of the matches: the source's trigger window bounds them
-    val rows =
-      if (started) batch.collect().toSeq
-      else {
-        if (exists(pendingDir))
-          ActionSink.undispatched(spark, spark.read.schema(schema).parquet(pendingDir), logDir)
-            .collect().foreach(r => held(key(r)) = r)
-        if (!exists(logDir)) batch.collect().toSeq
-        else {
-          spark.read.schema(StructType(Seq("event_id", "rule_name", "ts_us").map(schema(_))))
-            .parquet(logDir).filter(col("ts_us") >= horizonUs).collect()
-            .foreach(r => fired((r.getLong(0), r.getString(1))) = r.getLong(2))
-          ActionSink.undispatched(spark, batch, logDir).collect().toSeq
-        }
+    if (!started) {
+      val ids = pending.names().flatMap(_.toLongOption)
+      ids.zip(read(pending, schema, ids)).foreach { case (id, rows) =>
+        rows.foreach(r => held(key(r)) = (id, r))
       }
-    started = true
+      read(logs, logSchema, Seq(batchId).filter(id => logs.exists(id.toString)))
+        .foreach(_.foreach(r => fired(key(r)) = clockUs))
+      // the other files newest first, up to the first one with no row fired
+      // within the horizon (an unparsable row has none); 1, 2, 4, … files per
+      // decode, as each decode is a Spark job of tens of ms
+      var older = logs.names().flatMap(_.toLongOption).filter(_ != batchId).sorted.reverse
+      var n = 1
+      while (older.nonEmpty) {
+        val (chunk, rest) = older.splitAt(n)
+        val within = read(logs, logSchema, chunk)
+          .takeWhile(_.exists(r => !r.isNullAt(firedIdx) && r.getLong(firedIdx) >= horizonUs))
+        within.foreach(_.foreach(r => fired(key(r)) = r.getLong(firedIdx)))
+        older = if (within.size < chunk.size) Nil else rest
+        n *= 2
+      }
+      started = true
+    }
     fired.filterInPlace((_, atUs) => atUs >= horizonUs)
-    val (dueNow, later) = rows.distinctBy(key)
+    // one collect of the matches: the source's trigger window bounds them
+    val (dueNow, later) = batch.collect().toSeq.distinctBy(key)
       .filterNot(r => held.contains(key(r)) || fired.contains(key(r)))
       .partition(_.getLong(dueIdx) <= clockUs)
     if (later.nonEmpty) {
-      local(later).coalesce(1).write.mode("append").parquet(pendingDir)
-      later.foreach(r => held(key(r)) = r)
+      later.foreach(r => held(key(r)) = (batchId, r))
+      settle(batchId)
     }
-    val fresh = dueNow ++ held.values.filter(_.getLong(dueIdx) <= clockUs)
+    val heldDue = held.values.filter(_._2.getLong(dueIdx) <= clockUs).toSeq
+    val fresh = dueNow ++ heldDue.map(_._2)
     if (fresh.nonEmpty) {
-      act(local(fresh))
-      local(fresh).coalesce(1).withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(logDir)
+      act(spark.createDataFrame(fresh.asJava, schema))
       fresh.foreach { r => held -= key(r); fired(key(r)) = clockUs }
+      heldDue.map(_._1).distinct.foreach(settle)
+      val name = batchId.toString
+      val prior = if (logs.exists(name)) logs.readLines(name) else Nil
+      logs.writeAtomic(name, prior.iterator ++ fresh.iterator.map(r =>
+        new GenericRowWithSchema((r.toSeq :+ batchId :+ clockUs).toArray, logSchema).json))
     }
   }
 }

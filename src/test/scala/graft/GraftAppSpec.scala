@@ -130,8 +130,8 @@ class GraftAppSpec extends AnyFunSuite {
         s"expiry notice missing in $all")
       assert(handles.events.exception.isEmpty,
         s"streaming pipeline died: ${handles.events.exception}")
-      // quiesce before reading the log — a first append still in flight has
-      // an empty dir (schema inference fails) until its commit lands
+      // quiesce before reading the log: a batch still in flight may not
+      // have written its dispatch file yet
       handles.events.processAllAvailable()
       handles.events.stop()
     } finally {
@@ -144,7 +144,7 @@ class GraftAppSpec extends AnyFunSuite {
     // expiry sweep may be mid-overwrite (delete + _temporary + rename) can
     // see an empty dir. After shutdown no writer is live.
     // effectively-once: the dispatch log never carries a duplicate key
-    val log = spark.read.parquet(s"$work/dispatched")
+    val log = spark.read.json(s"$work/dispatched")
       .select("event_id", "rule_name").collect().map(_.toSeq)
     assert(log.distinct.length == log.length, "duplicate dispatch")
     // the store now holds both rules: the swept survivor and the added one
@@ -323,7 +323,7 @@ class GraftAppSpec extends AnyFunSuite {
     assert(reply("signup rules list").contains("No rules."))
   }
 
-  test("job budget: a steady micro-batch with matches and no holds runs at most 3 Spark jobs") {
+  test("job budget: a steady micro-batch with matches and no holds runs at most 2 Spark jobs") {
     val work = java.nio.file.Files.createTempDirectory("graft_jobs").toString
     val rulesPath = s"$work/rules.json"
     RuleStore.save(Rules.dfFor(spark, Seq(rule("r_mal", "mal"))), rulesPath)
@@ -420,7 +420,7 @@ class GraftAppSpec extends AnyFunSuite {
               (if (paths.nonEmpty) paths.mkString(" ") else scans.mkString(" "))
           }.mkString(s"batch $b: ", "; ", "")
       }
-      assert(counts.values.forall(n => n > 0 && n <= 3),
+      assert(counts.values.forall(n => n > 0 && n <= 2),
         s"Spark jobs per batch: $counts\n" + batches.map(steps).mkString("\n"))
       assert(posts.get() > 0, "the matches were dispatched")
       assert(!new java.io.File(s"$work/pending").exists(), "notify actions are never held")

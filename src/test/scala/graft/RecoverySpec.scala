@@ -26,22 +26,6 @@ class RecoverySpec extends AnyFunSuite {
     dir
   }
 
-  /** A restart-safe dispatch sink: each batch acts on the rows not yet in
-    * the dispatch log, then logs them. */
-  private def dispatch(matched: DataFrame, logDir: String, ckpt: String)(
-      act: DataFrame => Unit): StreamingQuery =
-    matched.writeStream.option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = graft.streaming.ActionSink.undispatched(spark, batch, logDir)
-          .persist() // evaluated twice: act + log append
-        try {
-          act(fresh)
-          fresh.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(logDir)
-        } finally fresh.unpersist()
-        ()
-      }
-      .start()
-
   /** The delayed sink GraftApp runs: one `DelayedDispatcher` per query. */
   private def dispatchDelayed(matched: DataFrame, pendingDir: String, logDir: String,
       ckpt: String)(act: DataFrame => Unit): StreamingQuery = {
@@ -180,27 +164,27 @@ class RecoverySpec extends AnyFunSuite {
 
   test("action dispatch is effectively-once across a replayed batch") {
     import spark.implicits._
+    import graft.streaming.DelayedDispatcher
+    val pendingDir = tmp("dispatch_pend") + "/pending"
     val logDir = tmp("dispatch_log") + "/log"
-    val batch = Seq((1L, "r_a", "close"), (2L, "r_b", "notify"), (1L, "r_a", "close"))
-      .toDF("event_id", "rule_name", "actions")
+    val batch = matches((1L, "r_a", "close", 0L), (2L, "r_b", "notify", 0L),
+      (1L, "r_a", "close", 0L))
+    val now = graft.streaming.ActionSink.MaxHoldUs // past every deadline
     var acted = Seq.empty[(Long, String)]
     def act(df: org.apache.spark.sql.DataFrame): Unit =
       acted ++= df.select("event_id", "rule_name").as[(Long, String)].collect()
 
     // first delivery: in-batch duplicate collapses, both rules fire once
-    val fresh1 = graft.streaming.ActionSink.undispatched(spark, batch, logDir)
-    act(fresh1); fresh1.write.mode("append").parquet(logDir)
+    new DelayedDispatcher(spark, pendingDir, logDir).dispatch(batch, 0L, now)(act)
     assert(acted.sorted == Seq((1L, "r_a"), (2L, "r_b")))
 
     // replay of the same batch (the at-least-once case): nothing re-fires
-    val fresh2 = graft.streaming.ActionSink.undispatched(spark, batch, logDir)
-    act(fresh2)
+    val replay = new DelayedDispatcher(spark, pendingDir, logDir)
+    replay.dispatch(batch, 0L, now)(act)
     assert(acted.size == 2, "replayed batch must not re-dispatch")
 
     // a genuinely new match still goes out
-    val batch2 = Seq((3L, "r_a", "close")).toDF("event_id", "rule_name", "actions")
-    val fresh3 = graft.streaming.ActionSink.undispatched(spark, batch2, logDir)
-    act(fresh3); fresh3.write.mode("append").parquet(logDir)
+    replay.dispatch(matches((3L, "r_a", "close", 0L)), 1L, now)(act)
     assert(acted.sorted == Seq((1L, "r_a"), (2L, "r_b"), (3L, "r_a")))
   }
 
@@ -232,7 +216,7 @@ class RecoverySpec extends AnyFunSuite {
       .toDF("event_id", "rule_name", "action", "no_delay", "ts_us")
       .coalesce(1).write.mode("append").parquet(srcDir)
     run(tmp("delay_ckpt1"))
-    val after1 = spark.read.parquet(logDir).select("event_id").as[Long].collect().toSet
+    val after1 = spark.read.json(logDir).select("event_id").as[Long].collect().toSet
     assert(after1 == Set(2L), s"no dispatch before its deadline — got $after1")
 
     // file 2: a later event pushes the clock past every deadline
@@ -240,12 +224,12 @@ class RecoverySpec extends AnyFunSuite {
       .toDF("event_id", "rule_name", "action", "no_delay", "ts_us")
       .coalesce(1).write.mode("append").parquet(srcDir)
     run(tmp("delay_ckpt2"))
-    val after2 = spark.read.parquet(logDir).select("event_id").as[Long].collect().toSet
+    val after2 = spark.read.json(logDir).select("event_id").as[Long].collect().toSet
     assert(after2 == Set(1L, 2L, 3L), s"deadline passed -> dispatch, got $after2")
 
     // full replay on a FRESH checkpoint (at-least-once): nothing re-fires
     run(tmp("delay_ckpt3"))
-    assert(spark.read.parquet(logDir).count() == 3, "effectively-once after restart")
+    assert(spark.read.json(logDir).count() == 3, "effectively-once after restart")
   }
 
   /** Matches as GraftApp stamps them: `due_us` = `ts_us` + the action delay. */
@@ -276,7 +260,7 @@ class RecoverySpec extends AnyFunSuite {
     // deadline of a close at t=0: somewhere in [31.5, 101.5) s
     new DelayedDispatcher(spark, pendingDir, logDir)
       .dispatch(matches((1L, "r_close", "close", 0L)), 0L, 0L)(acted(_))
-    assert(acted.ids.isEmpty && spark.read.parquet(pendingDir).count() == 1)
+    assert(acted.ids.isEmpty && spark.read.json(pendingDir).count() == 1)
 
     // restart: a new dispatcher on the same logs
     val d2 = new DelayedDispatcher(spark, pendingDir, logDir)
@@ -299,7 +283,7 @@ class RecoverySpec extends AnyFunSuite {
     d.dispatch(matches((3L, "r_a", "notify", 10L)), 1L, 10L)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L, 3L))
     assert(!exists(pendingDir), "nothing was held, so nothing was staged")
-    assert(spark.read.parquet(logDir).count() == 3)
+    assert(spark.read.json(logDir).count() == 3)
   }
 
   test("DelayedDispatcher: an in-batch duplicate fires once; a replay on a fresh dispatcher fires nothing") {
@@ -320,7 +304,7 @@ class RecoverySpec extends AnyFunSuite {
       replay.dispatch(b, i.toLong, now)(acted(_))
     }
     assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"the replay fired again: ${acted.ids}")
-    assert(spark.read.parquet(logDir).count() == 3)
+    assert(spark.read.json(logDir).count() == 3)
   }
 
   test("DelayedDispatcher: an identical signup re-fires only once the hold horizon has passed") {
@@ -349,7 +333,7 @@ class RecoverySpec extends AnyFunSuite {
     assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"the replay fired again: ${acted.ids}")
   }
 
-  test("DelayedDispatcher: a close fired long ago stays fired when the pending log is read back") {
+  test("DelayedDispatcher: a close fired long ago stays fired, and a restart finds no pending file") {
     val pendingDir = tmp("old_pend") + "/pending"
     val logDir = tmp("old_log") + "/log"
     val acted = new Acted
@@ -363,8 +347,8 @@ class RecoverySpec extends AnyFunSuite {
     d.dispatch(matches((3L, "r_close", "close", 1000L * s)), 2L, 1000L * s)(acted(_))
     d.dispatch(matches((4L, "r_a", "notify", 1200L * s)), 3L, 1200L * s)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L, 3L, 4L), s"the old close fired again: ${acted.ids}")
-    // a restart reads the pending log back: both closes are in it, and both
-    // already fired
+    // each close's pending file went when it fired, so a restart holds nothing
+    assert(new java.io.File(pendingDir).list().isEmpty, "a fired close left its pending file")
     new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir)
       .dispatch(matches((5L, "r_a", "notify", 1400L * s)), 4L, 1400L * s)(acted(_))
     assert(acted.ids.sorted == Seq(1L, 2L, 3L, 4L, 5L), s"a close fired again: ${acted.ids}")
@@ -409,7 +393,7 @@ class RecoverySpec extends AnyFunSuite {
     assert(acted.ids.sorted == Seq(1L, 2L, 3L), s"the close fired twice: ${acted.ids}")
   }
 
-  test("DelayedDispatcher: after its first batch, firing a held close and a due-now notify runs 1 Spark job") {
+  test("DelayedDispatcher: after its first batch, firing a held close and a due-now notify runs no Spark job") {
     val pendingDir = tmp("jobs_pend") + "/pending"
     val logDir = tmp("jobs_log") + "/log"
     val acted = new Acted
@@ -437,20 +421,116 @@ class RecoverySpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(listener)
     }
     assert(acted.ids.sorted == Seq(1L, 2L), "the clock (200 s) passed the close's deadline")
-    assert(jobs.get() == 1, s"Spark jobs for the batch: ${jobs.get()} (only the dispatched/ append)")
+    assert(jobs.get() == 0, s"Spark jobs for the batch: ${jobs.get()}")
+  }
+
+  test("DelayedDispatcher: a held close's pending file shrinks as it fires, and a restart between fires it once") {
+    import spark.implicits._
+    import graft.streaming.DelayedDispatcher
+    val pendingDir = tmp("shrink_pend") + "/pending"
+    val logDir = tmp("shrink_log") + "/log"
+    val acted = new Acted
+    def heldRows = {
+      val f = new java.io.File(pendingDir, "0")
+      if (f.exists()) Files.readAllLines(f.toPath).size else 0
+    }
+    // two closes matched at 0 s with different deadlines
+    val closes = matches((1L, "r_close", "close", 0L), (2L, "r_close", "close", 0L))
+    val due = closes.select("event_id", "due_us").as[(Long, Long)].collect().toMap
+    assert(due(1L) != due(2L), s"fixture: the closes share a deadline: $due")
+    val Seq(first, second) = Seq(1L, 2L).sortBy(due)
+    new DelayedDispatcher(spark, pendingDir, logDir).dispatch(closes, 0L, 0L)(acted(_))
+    assert(acted.ids.isEmpty && heldRows == 2)
+    // the first close comes due; the query then dies before the second does
+    val d = new DelayedDispatcher(spark, pendingDir, logDir)
+    d.dispatch(matches((3L, "r_a", "notify", due(first))), 1L, due(first))(acted(_))
+    assert(acted.ids.sorted == Seq(first, 3L).sorted && heldRows == 1)
+    // the restart holds only the second close, and fires it once
+    val restarted = new DelayedDispatcher(spark, pendingDir, logDir)
+    restarted.dispatch(matches((4L, "r_a", "notify", due(second))), 2L, due(second))(acted(_))
+    assert(heldRows == 0, "the pending file outlived its last close")
+    restarted.dispatch(matches((5L, "r_a", "notify", due(second) + 1L)), 3L, due(second) + 1L)(
+      acted(_))
+    new DelayedDispatcher(spark, pendingDir, logDir)
+      .dispatch(matches((6L, "r_a", "notify", due(second) + 2L)), 4L, due(second) + 2L)(acted(_))
+    assert(acted.ids.sorted == Seq(1L, 2L, 3L, 4L, 5L, 6L), s"a close fired twice: ${acted.ids}")
+  }
+
+  test("DelayedDispatcher: a first batch follows the steady path's re-fire rule") {
+    import graft.streaming.ActionSink.MaxHoldUs
+    import graft.streaming.DelayedDispatcher
+    for (restart <- Seq(false, true)) {
+      val pendingDir = tmp("refire_pend") + "/pending"
+      val logDir = tmp("refire_log") + "/log"
+      val acted = new Acted
+      val steady = new DelayedDispatcher(spark, pendingDir, logDir)
+      def on = if (restart) new DelayedDispatcher(spark, pendingDir, logDir) else steady
+      val t = 5000L * 1000000L
+      steady.dispatch(matches((1L, "r_a", "notify", t)), 0L, t)(acted(_))
+      on.dispatch(matches((1L, "r_a", "notify", t + MaxHoldUs)), 1L, t + MaxHoldUs)(acted(_))
+      assert(acted.ids == Seq(1L), s"restart=$restart: fired again within the horizon")
+      on.dispatch(matches((1L, "r_a", "notify", t + MaxHoldUs + 1L)), 2L,
+        t + MaxHoldUs + 1L)(acted(_))
+      assert(acted.ids == Seq(1L, 1L), s"restart=$restart: not fired again past the horizon")
+    }
+  }
+
+  test("DelayedDispatcher: a restart reads its own dispatch file and the horizon's, not the whole log") {
+    import graft.streaming.ActionSink.MaxHoldUs
+    val pendingDir = tmp("horizon_read_pend") + "/pending"
+    val logDir = new java.io.File(tmp("horizon_read_log"), "log")
+    logDir.mkdirs()
+    // 1 000 batch files of 100 dispatch rows each; batch b fired at b * 30 s
+    val s = 1000000L
+    def write(b: Int, lines: Seq[String]): Unit =
+      Files.write(new java.io.File(logDir, b.toString).toPath, lines.mkString("", "\n", "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    for (b <- 0 until 1000) write(b, (0 until 100).map { i =>
+      val id = b * 100L + i
+      s"""{"event_id":$id,"rule_name":"r_a","actions":"notify","ts_us":${b * 30L * s},""" +
+        s""""due_us":${b * 30L * s},"batch_id":$b,"fired_us":${b * 30L * s}}"""
+    })
+    // the clock one second past batch 999 puts batches 996-999 within the horizon
+    val now = 999L * 30L * s + s
+    val inside = (0 until 1000).filter(b => b * 30L * s >= now - MaxHoldUs)
+    assert(inside == (996 until 1000), s"fixture: $inside")
+    // no older file parses as a dispatch row, and one that lies far outside
+    // the horizon is not even text, so any read of it throws: the first
+    // batch reads files newest first, in doubling chunks, and stops at the
+    // first one with no row within the horizon
+    for (b <- 900 until 996) write(b, Seq("not a dispatch row"))
+    for (b <- 0 until 900)
+      Files.write(new java.io.File(logDir, b.toString).toPath, Array[Byte](-1, -2, '\n'))
+    val acted = new Acted
+    new graft.streaming.DelayedDispatcher(spark, pendingDir, logDir.toString)
+      .dispatch(matches((99901L, "r_a", "notify", now), (99650L, "r_a", "notify", now),
+        (99501L, "r_a", "notify", now), (7L, "r_b", "notify", now)), 1000L, now)(acted(_))
+    assert(acted.ids.sorted == Seq(7L, 99501L), s"keys fired within the horizon re-fired: ${acted.ids}")
+  }
+
+  test("BatchJournal: the Hadoop backend replaces a file in place and leaves no temp file") {
+    val dir = new java.io.File(tmp("journal_hadoop"), "j")
+    val j = new graft.streaming.HadoopBatchJournal(dir.toURI.toString)
+    j.writeAtomic("7", Iterator("a", "b"))
+    j.writeAtomic("7", Iterator("c"))
+    assert(j.readLines("7") == Seq("c"))
+    assert(j.names().filterNot(_.endsWith(".crc")) == Seq("7"), s"files: ${j.names()}")
+    assert(!dir.list().exists(n => n.startsWith("._") && n.endsWith(".tmp")), "temp file left")
   }
 
   test("ActionSink.dispatch end-to-end over a streaming source") {
     val srcDir = splitEvents()
+    val pendingDir = tmp("dispatch_e2e") + "/pending"
     val logDir = tmp("dispatch_e2e") + "/log"
     val ckpt = tmp("ckpt_e2e")
     val schema = Tables(spark, sf).events.schema
     val matched = spark.readStream.schema(schema).parquet(srcDir)
       .filter(col("event_type") === "signup")
-      .select(col("event_id"), lit("r_stream").as("rule_name"))
-    val q = dispatch(matched, logDir, ckpt)(_ => ())
+      .select(col("event_id"), lit("r_stream").as("rule_name"), lit(0L).as("ts_us"),
+        lit(0L).as("due_us"))
+    val q = dispatchDelayed(matched, pendingDir, logDir, ckpt)(_ => ())
     try q.processAllAvailable() finally q.stop()
-    val logged = spark.read.parquet(logDir)
+    val logged = spark.read.json(logDir)
     val expected = Tables(spark, sf).events.filter(col("event_type") === "signup").count()
     assert(logged.count() == expected)
     assert(logged.select("event_id").distinct().count() == expected, "no duplicate dispatches")

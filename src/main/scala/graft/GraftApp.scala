@@ -11,7 +11,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
 
 import graft.commands.CommandParser
 import graft.rules.{RuleEngine, RuleStore}
@@ -28,13 +27,14 @@ import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
   *   - `eventhandler::handle_events` → a foreachBatch loop
   *     ([[handleEvents]]) that matches each batch via the broadcast rule
   *     join against the in-memory rule snapshot (the reference's rule
-  *     vector; rebuilt from the rules file only after a mutation) in one
-  *     collect, hands the matches to one [[DelayedDispatcher]] per start
-  *     (due-now actions fire in the same batch; the randomized 30–100 s holds
-  *     wait in memory until a batch's time passes their deadline;
-  *     effectively-once either way, through per-batch JSON-line files in
-  *     the pending and dispatch logs, with no Spark job), and then adds the
-  *     batch's signups to the app's [[SeenRing]] for `seen`.
+  *     vector; read from the rules file when an app starts, then replaced
+  *     by the rows each mutation saves) in one collect, hands the matches
+  *     to one [[DelayedDispatcher]] per start (due-now actions fire in the
+  *     same batch; the randomized 30–100 s holds wait in memory until a
+  *     batch's time passes their deadline; effectively-once either way,
+  *     through per-batch JSON-line files in the pending and dispatch logs,
+  *     with no Spark job), and then adds the batch's signups to the app's
+  *     [[SeenRing]] for `seen`.
   *   - `zulip::rtm::connect_to_zulip` + `status::status_loop` → [[ZulipRtm]]
   *     under [[ZulipSupervisor]] (300 s ping watchdog), commands dispatched
   *     by [[commandDispatcher]] against the same rule snapshot and file.
@@ -59,10 +59,10 @@ object GraftApp {
       events.stop()
       // await the worker threads — returning while a sweep's store mutation
       // is mid-save would let "after shutdown" readers race a live writer
-      // (and a JVM exit then kill the daemon mid-overwrite). Never
-      // interrupt them: an interrupted write is exactly the truncation the
-      // staged save exists to avoid. Both loops poll `stop`, so the waits
-      // are bounded by one sleep + one sweep.
+      // (and a JVM exit then kill the daemon mid-save). Never interrupt
+      // them: an interrupt can end a save between its write and its
+      // rename. Both loops poll `stop`, so the waits are bounded by one
+      // sleep + one sweep.
       expiry.join(120000L)
       zulip.join(10000L)
       // a timed-out join means a wedged worker is STILL a live writer —
@@ -78,41 +78,39 @@ object GraftApp {
   }
 
   /** Serializes every touch of the rules store. Three threads share it
-    * (Zulip commands, the expiry sweep, the micro-batches), and a plain
-    * `load → transform → save(overwrite)` is doubly unsafe concurrently:
-    * overwrite deletes the very files a lazy load still reads
-    * (self-overwrite), and two writers stomp one `_temporary` dir. So every
-    * read goes through the snapshot below and every write holds the lock
-    * across its read-modify-write. The reference has the same critical
-    * section implicitly — one mpsc consumer owns the rules (main.rs:15). */
+    * (Zulip commands, the expiry sweep, the micro-batches), and two
+    * concurrent `snapshot → transform → save` passes would each lose the
+    * other's change. So every read goes through the snapshot below and
+    * every write holds the lock across its read-modify-write. The reference
+    * has the same critical section implicitly — one mpsc consumer owns the
+    * rules (main.rs:15). */
   private val rulesLock = new Object
 
   /** The rules of each store path (one JVM can run two apps), held as local
     * rows like the reference's in-memory rule vector. A frame built on them
-    * is a local relation: matching a batch against it reads no file, and
-    * a write built from it cannot read the files it overwrites. Every
-    * mutation drops its path's entry, so the next read reloads the file. */
+    * is a local relation: matching a batch against it reads no file. A
+    * mutation replaces its path's entry with the rows it saved, so only a
+    * missing entry (a new app, or a failed save) reads the file. */
   @GuardedBy("rulesLock")
-  private val snapshots = mutable.Map.empty[String, (StructType, Array[Row])]
+  private val snapshots = mutable.Map.empty[String, Array[Row]]
 
-  /** The current rules of `rulesPath`, loaded from the file only when a
-    * mutation has happened since the last load. */
-  private[graft] def rules(spark: SparkSession, rulesPath: String): DataFrame = {
-    val (schema, rows) = rulesLock.synchronized {
-      snapshots.getOrElseUpdate(rulesPath, {
-        val df = RuleStore.load(spark, rulesPath)
-        (df.schema, df.collect())
-      })
+  /** The current rules of `rulesPath` as rows of [[RuleStore.Schema]]. */
+  private def snapshot(spark: SparkSession, rulesPath: String): Array[Row] =
+    rulesLock.synchronized {
+      snapshots.getOrElseUpdate(rulesPath, RuleStore.load(spark, rulesPath).collect())
     }
-    spark.createDataFrame(rows.toSeq.asJava, schema)
-  }
+
+  private[graft] def rules(spark: SparkSession, rulesPath: String): DataFrame =
+    spark.createDataFrame(snapshot(spark, rulesPath).toSeq.asJava, RuleStore.Schema)
 
   private[graft] def mutateRules(spark: SparkSession, rulesPath: String)(
       f: DataFrame => DataFrame): Unit =
     rulesLock.synchronized {
-      // dropped even when the save fails: it may have changed the store
-      try RuleStore.save(f(rules(spark, rulesPath)), rulesPath)
-      finally snapshots.remove(rulesPath)
+      try snapshots(rulesPath) = RuleStore.save(f(rules(spark, rulesPath)), rulesPath)
+      catch {
+        // a failed save may have changed the store: the next read reloads it
+        case e: Throwable => snapshots.remove(rulesPath); throw e
+      }
     }
 
   /** One expiry sweep: advance the once-only notice counters and drop the
@@ -165,10 +163,10 @@ object GraftApp {
   private def micros(clock: Clock): Long = clock.millis() * 1000L
 
   /** Zulip command dispatch against the rule snapshot the event pipeline
-    * matches with; a mutation saves the file and drops the snapshot, so its
-    * effect reaches the very next batch (the reference's in-memory handoff,
-    * made durable). `seen` answers from `seen` without running a job;
-    * `add`, `renew` and `namechk` read the time from `clock`. */
+    * matches with; a mutation saves the file and replaces the snapshot, so
+    * its effect reaches the very next batch (the reference's in-memory
+    * handoff, made durable). `seen` answers from `seen` without running a
+    * job; `add`, `renew` and `namechk` read the time from `clock`. */
   def commandDispatcher(spark: SparkSession, rulesPath: String, seen: SeenRing,
       clock: Clock): CommandParser.Parsed => Option[String] = {
     // `rules test` criteria may call is_in_ip_range (lua.rs:85-100)
@@ -181,7 +179,11 @@ object GraftApp {
       p.kind match {
         case "status" => Some("I'm alive!")
         case "list" =>
-          val names = store.select(col("name")).collect().map(_.getString(0)).sorted
+          // a disabled rule's name in parentheses (rules.rs:113-124)
+          val names = snapshot(spark, rulesPath).sortBy(_.getAs[String]("name")).map { r =>
+            val name = r.getAs[String]("name")
+            if (r.getAs[Any]("enabled") == true) name else s"($name)"
+          }
           Some(if (names.isEmpty) "No rules." else names.mkString(", "))
         case "show" =>
           val rows = store.filter(col("name") === p.name.get).toJSON.collect()
@@ -197,9 +199,13 @@ object GraftApp {
           saveAnd(RuleStore.renew(_, p.name.get, newExp), s"Rule ${p.name.get} renewed.")
         case "add" =>
           CommandParser.toRuleRow(p, micros(clock)) match {
-            case Some(row) =>
-              try saveAnd(RuleStore.add(_, row, spark), s"Rule ${row.name} added.")
-              catch { case e: IllegalArgumentException => Some(e.getMessage) }
+            case Some(row) => rulesLock.synchronized {
+              if (snapshot(spark, rulesPath).exists(_.getAs[String]("name") == row.name))
+                Some(s"Rule ${row.name} already exists.")
+              else
+                try saveAnd(RuleStore.add(_, row, spark), s"Rule ${row.name} added.")
+                catch { case e: IllegalArgumentException => Some(e.getMessage) }
+            }
             case None => Some("Could not compile rule")
           }
         case "test" =>

@@ -1,69 +1,58 @@
 package graft.rules
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.streaming.BatchJournal
 
 /** Rule persistence (reference rules.rs:26-47: rules live in a JSON file,
   * rewritten on every mutation).
   *
-  * The Spark-native store is a single-partition JSON dataset — human-
-  * readable like the reference's rules.json, atomic via overwrite, and
-  * loadable straight into the broadcast dim the engine joins against.
-  * Lifecycle mutations (add/remove/enable/disable/renew) are pure DataFrame
-  * transforms: load → transform → save.
+  * A store is a directory holding one JSON-lines file, `part-00000.json`,
+  * written from the driver through [[BatchJournal]] and replaced atomically
+  * (write a temp file, then rename it over the old one), like the live
+  * bot's other logs. `spark.read.json` reads it, so it loads straight into
+  * the broadcast dim the engine joins against. Lifecycle mutations
+  * (add/remove/enable/disable/renew) are pure DataFrame transforms:
+  * load → transform → save.
   */
 object RuleStore {
 
-  /** Staged write + swap: `mode("overwrite")` straight onto `path` deletes
-    * the old store BEFORE the new one exists — a crash (or an interrupted
-    * shutdown) mid-write loses every rule. Writing to a staged sibling
-    * first shrinks the exposed window to one directory rename, and
-    * [[load]] recovers the rename-not-yet-done case from the staged dir.
-    *
-    * The Hadoop FS API reports delete/rename failure via BOOLEAN, not
-    * exception (object-store rename semantics; or a concurrent
-    * out-of-lock load completing the swap first) — both results are
-    * checked and a failure THROWS rather than leaving the store silently
-    * stranded in `.staged` (the staged dir still holds the data, so
-    * [[load]]'s recovery path completes the swap on the next read).
-    * The delete→rename window itself is non-atomic: ALL in-process
-    * access must go through [[graft.GraftApp]]'s `rulesLock` (readers
-    * outside it can observe the store missing mid-swap). */
-  def save(rules: DataFrame, path: String): Unit = {
-    val staged = path + ".staged"
-    rules.coalesce(1).write.mode("overwrite").json(staged)
-    val conf = rules.sparkSession.sparkContext.hadoopConfiguration
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(conf)
-    if (fs.exists(hPath) && !fs.delete(hPath, true))
-      throw new java.io.IOException(
-        s"RuleStore.save: could not delete old store at $path " +
-          s"(new state is intact in $staged; load() will recover it)")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staged), hPath))
-      throw new java.io.IOException(
-        s"RuleStore.save: rename $staged -> $path failed " +
-          s"(new state is intact in $staged; load() will recover it)")
+  /** The store's columns. `exp_notification` is the once-only expiry-notice
+    * counter [[sweepNotices]] advances; dropping it on the save/load
+    * roundtrip would re-arm every past notification. A rule written before
+    * the counter existed reads it as null, which sweepNotices takes as 0. */
+  val Schema: StructType = StructType.fromDDL(
+    "name STRING, kind STRING, pattern STRING, num_arg INT, enabled BOOLEAN, " +
+      "susp_only BOOLEAN, no_delay BOOLEAN, expiry_us LONG, actions STRING, " +
+      "exp_notification INT")
+
+  /** The store's one data file (graftbench seeds the same layout). */
+  private val DataFile = "part-00000.json"
+
+  /** Replace the rules at `path` with `rules`, cast to [[Schema]] (a missing
+    * column is written as null), and return the rows written. One collect,
+    * then one atomic file replace: a crash leaves the old file or the new
+    * one, never a partial store. Any other visible file in the directory (a
+    * part file of a store Spark's writer laid out) is deleted after the
+    * replace, so after a save one data file holds the rules; a crash
+    * between the replace and that delete shows such a store's rows twice
+    * until the next save. */
+  def save(rules: DataFrame, path: String): Array[Row] = {
+    val rows = rules.select(Schema.map(f =>
+      (if (rules.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)): _*).collect()
+    val journal = BatchJournal.open(path)
+    journal.writeAtomic(DataFile, rows.iterator.map(_.json))
+    journal.names()
+      .filterNot(n => n == DataFile || n.startsWith("_") || n.startsWith("."))
+      .foreach(journal.delete)
+    rows
   }
 
-  /** Load keeps `exp_notification` (the once-only expiry-notice counter
-    * [[sweepNotices]] documents as "persist the result") — dropping it on
-    * the save/load roundtrip would re-arm every past notification. Files
-    * written before the counter existed read it as null; sweepNotices
-    * coalesces that to 0. */
-  def load(spark: SparkSession, path: String): DataFrame = {
-    // crash recovery: a save that died between delete and rename left the
-    // data only in the staged dir — finish the swap before reading
-    val conf = spark.sparkContext.hadoopConfiguration
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val hStaged = new org.apache.hadoop.fs.Path(path + ".staged")
-    val fs = hPath.getFileSystem(conf)
-    if (!fs.exists(hPath) && fs.exists(hStaged)) fs.rename(hStaged, hPath)
-    spark.read.schema(
-      "name STRING, kind STRING, pattern STRING, num_arg INT, enabled BOOLEAN, " +
-        "susp_only BOOLEAN, no_delay BOOLEAN, expiry_us LONG, actions STRING, " +
-        "exp_notification INT")
-      .json(path)
-  }
+  def load(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Schema).json(path)
 
   /** `signup rules add` — refuses duplicate names (rules.rs:49-57). */
   def add(rules: DataFrame, rule: RuleRow, spark: SparkSession): DataFrame = {

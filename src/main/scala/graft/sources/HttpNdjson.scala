@@ -103,7 +103,7 @@ class HttpNdjsonTable(options: CaseInsensitiveStringMap) extends Table with Supp
           // silenceTimeoutMs: SSE keepalive comments reset a byte-level
           // read timeout but are not events. 0 = disabled.
           silenceRestartMs = silenceRestartMs,
-          replayDir = Some(s"$checkpointLocation/graft-replay"))
+          replayDir = s"$checkpointLocation/graft-replay")
       }
     }
 }
@@ -119,8 +119,8 @@ class HttpNdjsonMicroBatchStream(
     reconnectDelayMs: Long,
     readTimeoutMs: Int,
     maxLinesPerTrigger: Long,
-    silenceRestartMs: Long = HttpNdjson.SilenceRestartMs,
-    replayDir: Option[String] = None)
+    replayDir: String,
+    silenceRestartMs: Long = HttpNdjson.SilenceRestartMs)
   extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics
   with Logging {
 
@@ -222,22 +222,20 @@ class HttpNdjsonMicroBatchStream(
   // the persisted committed watermark (written at every commit) advanced
   // past any journaled planned-but-uncommitted window.
   locally {
-    journal.foreach { j =>
-      try {
-        var resume = 0L
-        if (j.exists("_committed"))
-          resume = j.readLines("_committed").head.trim.toLong
-        j.names().foreach(n => parseWindow(n).foreach { case (_, b) =>
-          resume = math.max(resume, b)
-        })
-        if (resume > 0L) lock.synchronized { baseOffset = resume }
-      } catch {
-        case e0: Throwable =>
-          // degraded: the deserializeOffset rebase heuristic still prevents
-          // a crash-loop, at the cost of redelivering nothing
-          logWarning(s"http-ndjson: cannot restore resume point from " +
-            s"$replayDir (falling back to offset-rebase heuristic): $e0")
-      }
+    try {
+      var resume = 0L
+      if (journal.exists("_committed"))
+        resume = journal.readLines("_committed").head.trim.toLong
+      journal.names().foreach(n => parseWindow(n).foreach { case (_, b) =>
+        resume = math.max(resume, b)
+      })
+      if (resume > 0L) lock.synchronized { baseOffset = resume }
+    } catch {
+      case e0: Throwable =>
+        // degraded: the deserializeOffset rebase heuristic still prevents
+        // a crash-loop, at the cost of redelivering nothing
+        logWarning(s"http-ndjson: cannot restore resume point from " +
+          s"$replayDir (falling back to offset-rebase heuristic): $e0")
     }
   }
 
@@ -265,7 +263,7 @@ class HttpNdjsonMicroBatchStream(
   // for hdfs/object-store ones (see the journal's scaladoc for why the
   // local path must NOT go through the Hadoop local FS).
 
-  private lazy val journal: Option[BatchJournal] = replayDir.map(BatchJournal.open)
+  private lazy val journal: BatchJournal = BatchJournal.open(replayDir)
 
   private def parseWindow(name: String): Option[(Long, Long)] =
     name.split("-") match {
@@ -287,54 +285,50 @@ class HttpNdjsonMicroBatchStream(
   /** Persist a planned slice (idempotent: an existing file wins — a re-plan
     * of the same window must serve the bytes the engine already saw). */
   private def writeReplay(s: Long, e: Long, slice: Array[(String, Long)]): Unit =
-    journal.foreach { j =>
-      try {
-        val name = s"$s-$e"
-        if (!j.exists(name)) j.writeAtomic(name, slice.iterator.map(encodeRow))
-      } catch {
-        case e0: Throwable =>
-          // a failed journal write must FAIL the batch (surfaces as a query
-          // error and the batch retries), not silently downgrade the source
-          // to non-replayable
-          throw new IllegalStateException(
-            s"http-ndjson: cannot persist replay slice [$s,$e) under $replayDir", e0)
-      }
+    try {
+      val name = s"$s-$e"
+      if (!journal.exists(name)) journal.writeAtomic(name, slice.iterator.map(encodeRow))
+    } catch {
+      case e0: Throwable =>
+        // a failed journal write must FAIL the batch (surfaces as a query
+        // error and the batch retries), not silently downgrade the source
+        // to non-replayable
+        throw new IllegalStateException(
+          s"http-ndjson: cannot persist replay slice [$s,$e) under $replayDir", e0)
     }
 
   /** Load the journaled lines covering [s, upTo), stitched greedily from
     * whole journal files ([s,x) + [x,y) + …). The engine can merge an
     * uncommitted window with fresh data on restart, so the requested range
     * is not always a single file's exact window. Returns None on any gap. */
-  private def readReplayRange(s: Long, upTo: Long): Option[Array[(String, Long)]] =
-    journal.flatMap { j =>
-      if (upTo <= s) return Some(Array.empty)
-      val spans = j.names().flatMap(n => parseWindow(n).map { case (a, b) => (a, b, n) })
-      val rows = new ListBuffer[(String, Long)]
-      var cur = s
-      while (cur < upTo) {
-        // greedy: the file starting exactly at cur that reaches furthest
-        // without overshooting (overlapping entries exist when a merged
-        // restart window was re-journaled over its prefix)
-        spans.filter(sp => sp._1 == cur && sp._2 <= upTo).sortBy(-_._2).headOption match {
-          case Some((_, e0, n)) => rows ++= j.readLines(n).map(decodeRow); cur = e0
-          case None => return None
-        }
+  private def readReplayRange(s: Long, upTo: Long): Option[Array[(String, Long)]] = {
+    if (upTo <= s) return Some(Array.empty)
+    val spans = journal.names().flatMap(n => parseWindow(n).map { case (a, b) => (a, b, n) })
+    val rows = new ListBuffer[(String, Long)]
+    var cur = s
+    while (cur < upTo) {
+      // greedy: the file starting exactly at cur that reaches furthest
+      // without overshooting (overlapping entries exist when a merged
+      // restart window was re-journaled over its prefix)
+      spans.filter(sp => sp._1 == cur && sp._2 <= upTo).sortBy(-_._2).headOption match {
+        case Some((_, e0, n)) => rows ++= journal.readLines(n).map(decodeRow); cur = e0
+        case None => return None
       }
-      Some(rows.toArray)
     }
+    Some(rows.toArray)
+  }
 
   /** Drop journal files fully below the committed offset — a committed
     * batch never re-runs. Best-effort: a missed prune only leaves a small
     * file for the next commit to sweep. */
-  private def pruneReplay(committed: Long): Unit = journal.foreach { j =>
-    try j.names().foreach { n =>
-      parseWindow(n).foreach { case (_, b) => if (b <= committed) j.delete(n) }
+  private def pruneReplay(committed: Long): Unit =
+    try journal.names().foreach { n =>
+      parseWindow(n).foreach { case (_, b) => if (b <= committed) journal.delete(n) }
     } catch {
       case e0: Throwable =>
         logWarning(s"http-ndjson: replay prune under $replayDir failed " +
           s"(will retry at next commit): $e0")
     }
-  }
 
   override def initialOffset(): Offset = HttpLineOffset(0L)
 
@@ -425,9 +419,8 @@ class HttpNdjsonMicroBatchStream(
         all
       case (Some(None), Some(_)) =>
         // a straddling window with NO journal coverage means commit()
-        // trimmed lines a batch still addresses (or replay is off across a
-        // restart) — an empty/partial delivery would silently drop data, so
-        // stay loud
+        // trimmed lines a batch still addresses — an empty/partial delivery
+        // would silently drop data, so stay loud
         throw new IllegalStateException(
           s"offset window [$s,$e) straddles trimmed base with no journal " +
             "coverage — lines were trimmed that a batch still addresses")
@@ -436,7 +429,7 @@ class HttpNdjsonMicroBatchStream(
           s"(${j.length} lines) from the checkpoint journal")
         j
       case (Some(None), None) =>
-        // journal-less pre-restart window (replay=false or a checkpoint
+        // a pre-restart window the journal does not cover (a checkpoint
         // from before the journal existed): deliver empty, loudly, so the
         // query commits past it instead of crash-looping
         logWarning(s"http-ndjson: restart re-ran pre-restart window [$s,$e) " +
@@ -469,13 +462,12 @@ class HttpNdjsonMicroBatchStream(
     * resume point when no uncommitted journal window remains. Best-effort:
     * on failure the journal's max window end still bounds the resume, and
     * below that the offset-rebase heuristic still prevents a crash-loop. */
-  private def persistCommitted(n: Long): Unit = journal.foreach { j =>
-    try j.writeAtomic("_committed", Iterator(n.toString))
+  private def persistCommitted(n: Long): Unit =
+    try journal.writeAtomic("_committed", Iterator(n.toString))
     catch {
       case e0: Throwable =>
         logWarning(s"http-ndjson: cannot persist committed watermark $n: $e0")
     }
-  }
 
   override def commit(end: Offset): Unit = {
     val n = end.asInstanceOf[HttpLineOffset].n

@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 
-/** Minimal atomic file ops for the live bot's three logs, one small file per
+/** Minimal atomic file ops for the live bot's four logs, one small file per
   * name: the http-ndjson source's replay journal (one file per planned
-  * offset window) and [[DelayedDispatcher]]'s `pending/` and `dispatched/`
-  * logs (one file per micro-batch id).
+  * offset window), [[DelayedDispatcher]]'s `pending/` and `dispatched/`
+  * logs (one file per micro-batch id), and the rules store
+  * ([[graft.rules.RuleStore]], one file replaced on every mutation).
   *
   * Two backends: java.nio for local dirs and Hadoop FS for hdfs/object-store
   * ones. The local path must NOT go through the Hadoop local FS: without

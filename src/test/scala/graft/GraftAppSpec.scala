@@ -140,9 +140,7 @@ class GraftAppSpec extends AnyFunSuite {
       feed.stop(0)
     }
     // Post-shutdown reads: the app's own accesses go through its rules
-    // lock, but this spec-side load doesn't — reading while the 500 ms
-    // expiry sweep may be mid-overwrite (delete + _temporary + rename) can
-    // see an empty dir. After shutdown no writer is live.
+    // lock, but this spec-side load doesn't. After shutdown no writer is live.
     // effectively-once: the dispatch log never carries a duplicate key
     val log = spark.read.json(s"$work/dispatched")
       .select("event_id", "rule_name").collect().map(_.toSeq)
@@ -212,22 +210,18 @@ class GraftAppSpec extends AnyFunSuite {
     val rulesPath = s"$work/rules.json"
     RuleStore.save(Rules.dfFor(spark, Seq(rule("r_old", "mal"))), rulesPath)
     assert(matching(rulesPath, "mal1") == Set("r_old"))
-    // a save that died between deleting the old store and renaming the new
-    // one into place: the new rules are only in the staged dir
+    // a mutation that failed after the new rules landed in the file
     intercept[java.io.IOException] {
       GraftApp.mutateRules(spark, rulesPath) { _ =>
-        Rules.dfFor(spark, Seq(rule("r_new", "mal"))).coalesce(1)
-          .write.json(rulesPath + ".staged")
-        val path = new org.apache.hadoop.fs.Path(rulesPath)
-        path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
-        throw new java.io.IOException("rename failed")
+        RuleStore.save(Rules.dfFor(spark, Seq(rule("r_new", "mal"))), rulesPath)
+        throw new java.io.IOException("failed after the write")
       }
     }
     assert(matching(rulesPath, "mal1") == Set("r_new"))
   }
 
-  /** One app's batch handler and command replies over `rules`, and the
-    * action notices the handler posts. */
+  /** One app's batch handler and command replies over `rules`, the action
+    * notices the handler posts, and its rules path. */
   private def app(rules: Seq[RuleRow], clock: Clock = Clock.systemUTC()) = {
     val work = java.nio.file.Files.createTempDirectory("graft_handler").toString
     val rulesPath = s"$work/rules.json"
@@ -236,11 +230,11 @@ class GraftAppSpec extends AnyFunSuite {
     val posted = mutable.ArrayBuffer.empty[String]
     val handle = GraftApp.handleEvents(spark, rulesPath, work, clock, seen)(posted += _)
     (handle, ZulipRtm.parseOrError(GraftApp.commandDispatcher(spark, rulesPath, seen, clock)),
-      posted)
+      posted, rulesPath)
   }
 
   test("seen: exact replies after a batch, a lookup that ignores case, a repeat counted twice") {
-    val (handle, reply, _) = app(Seq(rule("r_none", "zzz")))
+    val (handle, reply, _, _) = app(Seq(rule("r_none", "zzz")))
     assert(reply("signup seen alice").contains("Username not seen recently"))
     handle(signups("alice" -> 1L, "bob" -> 1L), 0L)
     assert(reply("signup seen alice").contains("Seen: alice (1 events)"))
@@ -251,7 +245,7 @@ class GraftAppSpec extends AnyFunSuite {
   }
 
   test("seen: a signup that matches two rules is counted once") {
-    val (handle, reply, posted) = app(Seq(rule("r_mal", "mal"), rule("r_al", "al")))
+    val (handle, reply, posted, _) = app(Seq(rule("r_mal", "mal"), rule("r_al", "al")))
     handle(signups("mal1" -> 1L), 0L)
     assert(posted.sorted == Seq("action notify on mal1 (rule r_al)",
       "action notify on mal1 (rule r_mal)"))
@@ -259,7 +253,7 @@ class GraftAppSpec extends AnyFunSuite {
   }
 
   test("delayed dispatch: a held close fires on the first batch past its deadline, match or not") {
-    val (handle, _, posted) = app(Seq(rule("r_close", "mal").copy(actions = "close")))
+    val (handle, _, posted, _) = app(Seq(rule("r_close", "mal").copy(actions = "close")))
     handle(signups("mal1" -> 0L), 0L)
     assert(posted.isEmpty, "a close is held for 31.5 to 101.5 s")
     handle(signups("bob" -> 200000000L), 1L)
@@ -286,7 +280,7 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("real clock: a rule matches before its expiry and stops matching after it") {
     val clock = new StepClock(Instant.parse("2031-03-01T00:00:00Z"))
-    val (handle, reply, posted) = app(Seq(rule("r_none", "zzz")), clock)
+    val (handle, reply, posted, _) = app(Seq(rule("r_none", "zzz")), clock)
     // no expiry given: the rule expires 182 days after the clock's now
     assert(reply("signup rules add r_mal if username contains mal then notify")
       .contains("Rule r_mal added."))
@@ -321,6 +315,111 @@ class GraftAppSpec extends AnyFunSuite {
     assert(reply("signup rules list").contains("r_exp"), "kept for 3 days after expiry")
     assert(sweepsAt(expiry.plusSeconds(3L * 86400L + 3600L)).isEmpty)
     assert(reply("signup rules list").contains("No rules."))
+  }
+
+  /** The clock the catalogue's rules are evaluated at, so commands and
+    * `matching` share one time. */
+  private val fixedClock = Clock.fixed(Instant.ofEpochMilli(Rules.nowUs / 1000L), ZoneOffset.UTC)
+  private val dayUs = 86400L * 1000000L
+
+  test("rules add: a duplicate name is refused, and the old rule keeps matching") {
+    val (_, reply, _, rulesPath) = app(Seq(rule("r_mal", "mal")))
+    assert(reply("signup rules add r_mal if username contains bob then notify")
+      .contains("Rule r_mal already exists."))
+    assert(matching(rulesPath, "mal1") == Set("r_mal"))
+    assert(matching(rulesPath, "bob1").isEmpty, "the refused pattern matches nothing")
+    assert(RuleStore.load(spark, rulesPath).select("pattern").collect().map(_.getString(0))
+      .toSeq == Seq("mal"), "a refused add writes nothing")
+  }
+
+  test("rules list: a disabled rule's name is in parentheses, sorted by name") {
+    val (_, reply, _, _) = app(Seq(rule("r_c", "c"), rule("r_b", "b"), rule("r_a", "a")))
+    assert(reply("signup rules disable-re ^r_b").contains("Rules disabled."))
+    assert(reply("signup rules list").contains("r_a, (r_b), r_c"))
+  }
+
+  test("rule snapshot: every mutating command and a sweep reach the next match, and the snapshot equals the file") {
+    val (_, reply, _, rulesPath) = app(Seq(
+      rule("r_soon", "mal", Some(Rules.nowUs + dayUs)),
+      rule("r_old", "mal", Some(Rules.nowUs - dayUs))), fixedClock)
+    def step(want: Set[String]): Unit = {
+      assert(matching(rulesPath, "mal1") == want)
+      assert(GraftApp.rules(spark, rulesPath).collect().toSet ==
+        RuleStore.load(spark, rulesPath).collect().toSet, "the snapshot drifted from the file")
+    }
+    step(Set("r_soon"))
+    assert(reply("signup rules add r_al if username contains al then notify")
+      .contains("Rule r_al added."))
+    step(Set("r_soon", "r_al"))
+    assert(reply("signup rules disable-re ^r_soon").contains("Rules disabled."))
+    step(Set("r_al"))
+    assert(reply("signup rules enable-re ^r_soon").contains("Rules enabled."))
+    step(Set("r_soon", "r_al"))
+    assert(reply("signup rules renew r_old 14d").contains("Rule r_old renewed."))
+    step(Set("r_soon", "r_al", "r_old"))
+    assert(reply("signup rules remove r_al").contains("Rule r_al removed."))
+    step(Set("r_soon", "r_old"))
+    // five days on, r_soon is more than three days past its expiry
+    GraftApp.sweepRules(spark, rulesPath, Rules.nowUs + 5L * dayUs)
+    step(Set("r_old"))
+  }
+
+  /** The Spark jobs `body` starts on this thread, and the physical plans of
+    * their SQL executions. */
+  private def jobsOf(body: => Unit): (Int, Seq[String]) = {
+    val key = "graft.spec.tag"
+    val tag = java.util.UUID.randomUUID().toString
+    val execIds = new ConcurrentLinkedQueue[Long]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty(key) == tag)
+            execIds.add(Option(p.getProperty("spark.sql.execution.id")).fold(-1L)(_.toLong))
+          else if (p.getProperty(key) == s"$tag-end") flushed.countDown()
+        }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.put(s.executionId, s.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setLocalProperty(key, tag)
+      body
+      // the listener bus delivers events in order, asynchronously: once it
+      // has delivered this marker job, it has delivered every earlier event
+      spark.sparkContext.setLocalProperty(key, s"$tag-end")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus flush")
+    } finally {
+      spark.sparkContext.setLocalProperty(key, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val ids = execIds.asScala.toSeq
+    (ids.size, ids.distinct.flatMap(id => Option(plans.get(id))))
+  }
+
+  test("job budget: the batch after an add command, and the one after a sweep, runs at most 2 Spark jobs and reads no rules file") {
+    val (handle, reply, posted, rulesPath) =
+      app(Seq(rule("r_soon", "zzz", Some(Rules.nowUs + dayUs))), fixedClock)
+    handle(signups("mal0" -> 1L), 0L) // the dispatcher's first batch
+    assert(reply("signup rules add r_mal if username contains mal then notify")
+      .contains("Rule r_mal added."))
+    val (addJobs, addPlans) = jobsOf(handle(signups("mal1" -> 2L), 1L))
+    // five days on, r_soon is more than three days past its expiry
+    GraftApp.sweepRules(spark, rulesPath, Rules.nowUs + 5L * dayUs)
+    val (sweepJobs, sweepPlans) = jobsOf(handle(signups("mal2" -> 3L), 2L))
+    assert(posted == Seq("action notify on mal1 (rule r_mal)", "action notify on mal2 (rule r_mal)"))
+    assert(GraftApp.rules(spark, rulesPath).select("name").collect().map(_.getString(0))
+      .toSeq == Seq("r_mal"), "the sweep dropped r_soon")
+    for ((after, jobs, plans) <- Seq(("add", addJobs, addPlans), ("sweep", sweepJobs, sweepPlans))) {
+      assert(jobs <= 2, s"Spark jobs in the batch after the $after: $jobs\n${plans.mkString("\n")}")
+      assert(!plans.exists(_.contains(rulesPath)),
+        s"the batch after the $after read the rules file:\n${plans.mkString("\n")}")
+    }
   }
 
   test("job budget: a steady micro-batch with matches and no holds runs at most 2 Spark jobs") {

@@ -44,6 +44,10 @@ class HttpSourceSpec extends AnyFunSuite {
     } catch { case _: java.io.IOException => () } // a stopped reader hung up
   }
 
+  /** A fresh, empty replay-journal directory for one source instance. */
+  private def journalDir(): String =
+    java.nio.file.Files.createTempDirectory("http_replay").toString + "/graft-replay"
+
   private def metric(s: sources.HttpNdjsonMicroBatchStream, key: String): Long =
     s.metrics(java.util.Optional.empty()).get(key).toLong
 
@@ -124,7 +128,7 @@ class HttpSourceSpec extends AnyFunSuite {
     // No live server needed: the restart path is pure offset bookkeeping.
     val s = new sources.HttpNdjsonMicroBatchStream("http://localhost:1/none",
       sse = false, reconnectDelayMs = 60000, readTimeoutMs = 0,
-      maxLinesPerTrigger = Long.MaxValue)
+      maxLinesPerTrigger = Long.MaxValue, replayDir = journalDir())
     try {
       // offset-log restore: committed batch ended at 3, uncommitted at 5 —
       // deserializeOffset rebases the fresh (empty) buffer to the max (5)
@@ -158,7 +162,7 @@ class HttpSourceSpec extends AnyFunSuite {
       ps.flatMap(_.asInstanceOf[sources.HttpLinesPartition].rows).toSeq
     val a = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
       reconnectDelayMs = 100, readTimeoutMs = 0,
-      maxLinesPerTrigger = Long.MaxValue, replayDir = Some(replay))
+      maxLinesPerTrigger = Long.MaxValue, replayDir = replay)
     var batch2 = Seq.empty[(String, Long)]
     try {
       val deadline = System.currentTimeMillis() + 30000
@@ -184,7 +188,7 @@ class HttpSourceSpec extends AnyFunSuite {
     // "fresh process": new instance, same journal, feed unreachable
     val b = new sources.HttpNdjsonMicroBatchStream("http://localhost:1/none",
       sse = false, reconnectDelayMs = 60000, readTimeoutMs = 0,
-      maxLinesPerTrigger = Long.MaxValue, replayDir = Some(replay))
+      maxLinesPerTrigger = Long.MaxValue, replayDir = replay)
     try {
       b.deserializeOffset("3")
       b.deserializeOffset("5")
@@ -332,7 +336,7 @@ class HttpSourceSpec extends AnyFunSuite {
     }
     val s = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
       reconnectDelayMs = 100, readTimeoutMs = 0,
-      maxLinesPerTrigger = Long.MaxValue)
+      maxLinesPerTrigger = Long.MaxValue, replayDir = journalDir())
     try {
       val deadline = System.currentTimeMillis() + 10000
       while (s.latestOffset() != sources.HttpLineOffset(1) &&
@@ -402,7 +406,7 @@ class HttpSourceSpec extends AnyFunSuite {
     // waiting on a full buffer for longer than this after each batch
     val s = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
       reconnectDelayMs = 100, readTimeoutMs = 0, maxLinesPerTrigger = Long.MaxValue,
-      silenceRestartMs = 300)
+      replayDir = journalDir(), silenceRestartMs = 300)
     try {
       var (start, next, outOfOrder, maxBuffered) = (0L, 0L, 0L, 0L)
       val deadline = System.currentTimeMillis() + 60000
@@ -438,7 +442,8 @@ class HttpSourceSpec extends AnyFunSuite {
       if (hit == 1) flood(ex, 2 * cap) else chunked(ex, Nil)
     }
     val s = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
-      reconnectDelayMs = 100, readTimeoutMs = 0, maxLinesPerTrigger = Long.MaxValue)
+      reconnectDelayMs = 100, readTimeoutMs = 0, maxLinesPerTrigger = Long.MaxValue,
+      replayDir = journalDir())
     try {
       val deadline = System.currentTimeMillis() + 30000
       while (metric(s, "bufferedLines") < cap && System.currentTimeMillis() < deadline)
@@ -473,7 +478,7 @@ class HttpSourceSpec extends AnyFunSuite {
         .asInstanceOf[sources.HttpLineOffset].n
     val a = new sources.HttpNdjsonMicroBatchStream(url, sse = false,
       reconnectDelayMs = 100, readTimeoutMs = 0, maxLinesPerTrigger = 1000,
-      replayDir = Some(replay))
+      replayDir = replay)
     var batch2 = Seq.empty[(String, Long)]
     try {
       val deadline = System.currentTimeMillis() + 30000
@@ -487,7 +492,7 @@ class HttpSourceSpec extends AnyFunSuite {
 
     val b = new sources.HttpNdjsonMicroBatchStream("http://localhost:1/none",
       sse = false, reconnectDelayMs = 60000, readTimeoutMs = 0,
-      maxLinesPerTrigger = 1000, replayDir = Some(replay))
+      maxLinesPerTrigger = 1000, replayDir = replay)
     try {
       b.deserializeOffset("1000")
       b.deserializeOffset("2000")

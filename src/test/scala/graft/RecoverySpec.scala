@@ -536,27 +536,58 @@ class RecoverySpec extends AnyFunSuite {
     assert(logged.select("event_id").distinct().count() == expected, "no duplicate dispatches")
   }
 
-  test("RuleStore: a crash between delete and rename recovers from the staged dir") {
-    import graft.rules.{RuleRow, Rules, RuleStore}
+  private def ruleRows(names: String*) = names.map(n =>
+    graft.rules.RuleRow(n, "username_contains", n, 0, enabled = true, suspOnly = false,
+      noDelay = false, None, "notify"))
+
+  private def ruleNames(path: String): Seq[String] =
+    graft.rules.RuleStore.load(spark, path).select("name").collect().map(_.getString(0)).toSeq
+
+  /** The files Spark's reader sees in a store directory. */
+  private def dataFiles(path: String): Seq[String] =
+    new java.io.File(path).list().toSeq.filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+
+  test("RuleStore: a save that dies before its rename leaves the previous rules") {
+    import graft.rules.{Rules, RuleStore}
     val path = tmp("rulestore_crash") + "/rules.json"
-    val rows = Seq(
-      RuleRow("r1", "ip_match", "1.2.3.4", 0, enabled = true, suspOnly = false,
-        noDelay = false, None, "notify"),
-      RuleRow("r2", "username_contains", "bot", 0, enabled = true, suspOnly = false,
-        noDelay = false, None, "notify"))
-    RuleStore.save(Rules.dfFor(spark, rows), path)
-    // simulate the crash window: the staged write landed, the old store was
-    // deleted, the rename never happened
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val hStaged = new org.apache.hadoop.fs.Path(path + ".staged")
-    assert(fs.rename(hPath, hStaged), "fixture: move store to staged")
-    assert(!fs.exists(hPath))
-    // load finishes the swap and sees every rule
-    val names = RuleStore.load(spark, path)
-      .select("name").collect().map(_.getString(0)).toSet
-    assert(names == Set("r1", "r2"))
-    assert(fs.exists(hPath) && !fs.exists(hStaged), "swap must be completed")
+    RuleStore.save(Rules.dfFor(spark, ruleRows("r1", "r2")), path)
+    // the crash window: the next save wrote its temp file, the rename
+    // never happened
+    Files.write(java.nio.file.Paths.get(path, "._part-00000.json.tmp"),
+      "{\"name\":\"r_new\"".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(ruleNames(path).sorted == Seq("r1", "r2"))
+    // the next save replaces the leftover along with the file
+    RuleStore.save(Rules.dfFor(spark, ruleRows("r3")), path)
+    assert(ruleNames(path) == Seq("r3"))
+    assert(new java.io.File(path).list().sorted.toSeq == Seq("part-00000.json"))
+  }
+
+  test("RuleStore: a store laid out as graftbench seeds it loads, and its first save replaces the file") {
+    import graft.rules.{Rules, RuleStore}
+    val path = tmp("rulestore_seeded") + "/rules"
+    Files.createDirectories(java.nio.file.Paths.get(path))
+    Files.write(java.nio.file.Paths.get(path, "part-00000.json"),
+      ("""{"name":"r1","kind":"username_contains","pattern":"ab","num_arg":0,"enabled":true,""" +
+        """"susp_only":false,"no_delay":true,"actions":"notify"}""" + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Files.createFile(java.nio.file.Paths.get(path, "_SUCCESS"))
+    val loaded = RuleStore.load(spark, path).collect()
+    assert(loaded.map(_.getAs[String]("pattern")).toSeq == Seq("ab"))
+    assert(loaded.head.isNullAt(loaded.head.fieldIndex("expiry_us")))
+    RuleStore.save(Rules.dfFor(spark, ruleRows("r1", "r2")), path)
+    assert(ruleNames(path).sorted == Seq("r1", "r2"))
+    assert(dataFiles(path) == Seq("part-00000.json"))
+  }
+
+  test("RuleStore: a store written by Spark's writer has one data file after one save") {
+    import graft.rules.{Rules, RuleStore}
+    val path = tmp("rulestore_legacy") + "/rules.json"
+    Rules.dfFor(spark, ruleRows("r1")).write.json(path)
+    Rules.dfFor(spark, ruleRows("r2")).write.mode("append").json(path)
+    assert(dataFiles(path).size == 2, s"fixture: two part files in ${dataFiles(path)}")
+    assert(ruleNames(path).sorted == Seq("r1", "r2"))
+    RuleStore.save(RuleStore.add(RuleStore.load(spark, path), ruleRows("r3").head, spark), path)
+    assert(dataFiles(path) == Seq("part-00000.json"))
+    assert(ruleNames(path).sorted == Seq("r1", "r2", "r3"))
   }
 }
